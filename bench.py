@@ -53,7 +53,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from twitter_event_stream_spark import registry  # noqa: E402
 from twitter_event_stream_spark.operators.vector_search import knn_bench_query  # noqa: E402
-from twitter_event_stream_spark.session import get_spark  # noqa: E402
+from twitter_event_stream_spark.session import default_cpus, get_spark  # noqa: E402
 from twitter_event_stream_spark.tables import load_tables  # noqa: E402
 
 #: BASELINE.md row name → engine query. The knn row uses the vectorized
@@ -574,10 +574,11 @@ def main() -> None:
         # Scaling-evidence contract (r17, closing the r16 verdict's
         # suspect_cpus_ignored false positive): the core count actually in
         # effect, read back FROM THE RUNNING CONTEXT, so a low-core rerun
-        # is verifiable from the record itself — $SPARK_GRAFT_CPUS is
-        # honored by session.py (master local[cpus], shuffle.partitions =
-        # cpus) and defaultParallelism is the JVM's own report of it.
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or os.cpu_count(),
+        # is verifiable from the record itself — session.default_cpus is
+        # what get_spark sized the session with (master local[cpus],
+        # shuffle.partitions = cpus) and defaultParallelism is the JVM's
+        # own report of it.
+        "cpus": default_cpus(),
         "default_parallelism": spark.sparkContext.defaultParallelism,
         # selection verdict IN-BAND (r14): how many attempts ran, which
         # one this record is, and whether it passed the coherence test

@@ -391,6 +391,43 @@ def test_ivf_ann_recall_distributed_branch(spark, sf_dir):
     assert recall >= 0.4, f"distributed-branch IVF recall@5 too low: {recall:.2f}"
 
 
+@pytest.mark.parametrize("stride", [1, 2], ids=["contiguous", "stride2"])
+def test_train_quantizer_modulo_sample_branch(spark, stride):
+    """The sampled trainer's n >= 4096 branch (no fixture reaches it: the
+    largest holds 2,000 embeddings): on a seeded 5,000-vector frame the
+    broadcast centroids equal ``_lloyd`` over the numpy-side modulo
+    sample — ``vec_id % step == 0``, ordered by vec_id, capped at
+    ``2 * sample_target``. Stride-2 ids make every id pass the modulo
+    filter, so the cap binds and must keep the smallest ids."""
+    import numpy as np
+
+    from twitter_event_stream_spark.operators.vector_search import (
+        TARGET_CELL_ROWS,
+        _lloyd,
+        _train_quantizer,
+    )
+
+    n, dim = 5000, 8
+    rng = np.random.default_rng(7)
+    emb = rng.standard_normal((n, dim)).astype(np.float32)
+    ids = rng.permutation(n) * stride  # frame order != vec_id order
+    frame = spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in zip(ids, emb)],
+        "vec_id long, embedding array<float>",
+    )
+    got = _train_quantizer(spark, frame, None, seed=42).value
+
+    n_cells = max(8, -(-n // TARGET_CELL_ROWS))
+    sample_target = min(65536, max(2048, 4 * n_cells))
+    step = max(1, n // sample_target)
+    order = np.argsort(ids)
+    keep = order[ids[order] % step == 0][: 2 * sample_target]
+    assert len(keep) == (4096 if stride == 2 else 2500)
+    want = _lloyd(emb[keep].astype(np.float64), n_cells, 42)
+    assert got.shape == (n_cells, dim)
+    assert np.array_equal(got, want)
+
+
 def test_ivf_index_roundtrip(spark, sf_dir, tmp_path_factory):
     """r8 — persisted IVF index (build-once/probe-many): probing the
     written index must return EXACTLY the fresh ivf_topk result (same
@@ -399,6 +436,7 @@ def test_ivf_index_roundtrip(spark, sf_dir, tmp_path_factory):
     cells read), and a rebuild must reproduce identical centroids."""
     from pyspark.sql import functions as F
 
+    from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.vector_search import (
         ivf_topk,
         ivf_topk_indexed,
@@ -420,8 +458,12 @@ def test_ivf_index_roundtrip(spark, sf_dir, tmp_path_factory):
     plan = idx._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower(), plan[:1500]
     write_ivf_index(spark, e, f"{base}/b")
-    ca = spark.read.parquet(f"{base}/a/centroids").orderBy("cell").collect()
-    cb = spark.read.parquet(f"{base}/b/centroids").orderBy("cell").collect()
+    ca, cb = (
+        spark.read.parquet(f"{resolve_data_dir(spark, v)}/centroids")
+        .orderBy("cell")
+        .collect()
+        for v in (f"{base}/a", f"{base}/b")
+    )
     assert ca == cb
 
 
@@ -1648,6 +1690,7 @@ def test_ivf_index_append_and_stats(spark, sf_dir, tmp_path_factory):
 
     from pyspark.sql import functions as F
 
+    from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.vector_search import (
         _cell_assign,
         append_ivf_index,
@@ -1663,10 +1706,11 @@ def test_ivf_index_append_and_stats(spark, sf_dir, tmp_path_factory):
     rest = e.filter(F.col("vec_id") % 2 == 1)
     base = str(tmp_path_factory.mktemp("ivfappend")) + "/idx"
     write_ivf_index(spark, half, base)
+    cur = resolve_data_dir(spark, base)  # appends land in this version
 
     def data_files() -> set:
         out = set()
-        for root, dirs, files in os.walk(f"{base}/cells"):
+        for root, dirs, files in os.walk(f"{cur}/cells"):
             for fn in files:
                 if not fn.startswith(("_", ".")):
                     out.add(os.path.join(root, fn))
@@ -1681,7 +1725,7 @@ def test_ivf_index_append_and_stats(spark, sf_dir, tmp_path_factory):
 
     # appended cells == assigning the full corpus against the stored
     # (half-trained) centroids in one shot
-    cent = spark.read.parquet(f"{base}/centroids").orderBy("cell").toPandas()
+    cent = spark.read.parquet(f"{cur}/centroids").orderBy("cell").toPandas()
     bc = spark.sparkContext.broadcast(
         np.asarray(cent["centroid"].tolist(), dtype=np.float64)
     )
@@ -1690,7 +1734,7 @@ def test_ivf_index_append_and_stats(spark, sf_dir, tmp_path_factory):
     }
     got = {
         (r.vec_id, r.cell)
-        for r in spark.read.parquet(f"{base}/cells").collect()
+        for r in spark.read.parquet(f"{cur}/cells").collect()
     }
     assert got == want
 
@@ -1700,7 +1744,7 @@ def test_ivf_index_append_and_stats(spark, sf_dir, tmp_path_factory):
     assert any(r.cand_id % 2 == 1 for r in res), "appended vectors invisible"
 
     stats = ivf_index_stats(spark, base).collect()
-    n_cells = spark.read.parquet(f"{base}/centroids").count()
+    n_cells = spark.read.parquet(f"{cur}/centroids").count()
     assert len(stats) == n_cells
     assert sum(r.n_vectors for r in stats) == e.filter(
         F.col("embedding").isNotNull()
@@ -1710,15 +1754,12 @@ def test_ivf_index_append_and_stats(spark, sf_dir, tmp_path_factory):
         assert abs(r.skew - r.n_vectors / mean) < 1e-3
 
 
-@pytest.mark.parametrize("pointer", [False, True], ids=["rename", "pointer"])
-def test_compact_simhash_index(spark, sf_dir, tmp_path_factory, pointer):
+def test_compact_simhash_index(spark, sf_dir, tmp_path_factory):
     """r9 — X119 compaction for the append-grown dedup index: after
     several appends the band dirs hold many small files; compaction must
     shrink them to one file per band while preserving the EXACT row set,
     leaving every probe verdict unchanged, and remaining appendable
-    afterwards (the maintenance cycle continues). Parameterized over both
-    publish mechanisms (r11): the legacy rename swap and the
-    pointer-versioned S3A-safe layout — identical observable behavior."""
+    afterwards (the maintenance cycle continues)."""
     from pyspark.sql import functions as F
 
     from twitter_event_stream_spark.fsio import (
@@ -1742,9 +1783,7 @@ def test_compact_simhash_index(spark, sf_dir, tmp_path_factory, pointer):
 
     d = table(spark, sf_dir, "documents")
     path = str(tmp_path_factory.mktemp("shcompact")) + "/idx"
-    write_simhash_index(
-        spark, d.filter(F.col("doc_id") % 4 == 0), path, pointer=pointer
-    )
+    write_simhash_index(spark, d.filter(F.col("doc_id") % 4 == 0), path)
     for m in (1, 2):  # simulated ingest cadence: two appends
         write_simhash_index(
             spark, d.filter(F.col("doc_id") % 4 == m), path, mode="append"
@@ -1766,9 +1805,9 @@ def test_compact_simhash_index(spark, sf_dir, tmp_path_factory, pointer):
     rep = compact_band_rows(spark, path)
     assert rep["files_before"] == n_before
     assert rep["files_after"] == 4  # one file per band partition
-    # after the compaction published (pointer layout: a new version with
-    # the previous retained for grace), the root count still reports only
-    # the LIVE version's files
+    # after the compaction published (a new version with the previous
+    # retained for grace), the root count still reports only the LIVE
+    # version's files
     assert data_file_count(spark, path) == rep["files_after"]
     after_rows = idx_rows(path)
     assert after_rows == before_rows, "compaction changed index content"
@@ -1800,13 +1839,11 @@ def test_compact_simhash_index(spark, sf_dir, tmp_path_factory, pointer):
     assert idx_rows(path) == grown_rows
 
 
-@pytest.mark.parametrize("pointer", [False, True], ids=["rename", "pointer"])
-def test_compact_ivf_cells(spark, sf_dir, tmp_path_factory, pointer):
+def test_compact_ivf_cells(spark, sf_dir, tmp_path_factory):
     """r9 — X119 compaction for the appended IVF index: rewrite the cell
     partitions to one file per cell; probe results must be bit-identical,
     occupancy stats unchanged, centroids untouched, and the index still
-    appendable afterwards. Parameterized over both publish mechanisms
-    (r11): rename swap and pointer-versioned layout."""
+    appendable afterwards."""
     from pyspark.sql import functions as F
 
     from twitter_event_stream_spark.fsio import (
@@ -1831,9 +1868,7 @@ def test_compact_ivf_cells(spark, sf_dir, tmp_path_factory, pointer):
 
     e = table(spark, sf_dir, "embeddings")
     base = str(tmp_path_factory.mktemp("ivfcompact")) + "/idx"
-    write_ivf_index(
-        spark, e.filter(F.col("vec_id") % 3 == 0), base, pointer=pointer
-    )
+    write_ivf_index(spark, e.filter(F.col("vec_id") % 3 == 0), base)
     for m in (1, 2):
         append_ivf_index(spark, e.filter(F.col("vec_id") % 3 == m), base)
 
@@ -1907,16 +1942,14 @@ def test_index_gate_rejects_unexact_radius(spark, tmp_path_factory):
     assert len(ok) == 1
 
 
-@pytest.mark.parametrize("pointer", [False, True], ids=["rename", "pointer"])
-def test_rebuild_ivf_index(spark, sf_dir, tmp_path_factory, pointer):
+def test_rebuild_ivf_index(spark, sf_dir, tmp_path_factory):
     """r9 — the drift rebuild made executable: retraining over every
     VISIBLE vector (absorbed + committed streaming-ingest batches) must
-    consume the spill, swap in a coherent whole index, and reproduce
+    consume the spill, publish a coherent whole index, and reproduce
     BIT-IDENTICALLY the index a fresh build over the same vector set
     produces (the quantizer sample is a TakeOrdered pure function of the
-    data). Parameterized over both publish mechanisms (r11): in pointer
-    mode the spill batches are retired explicitly after the flip instead
-    of vanishing with the swapped-away directory."""
+    data). The spill batches are retired explicitly after the flip, with
+    one maintenance cycle of grace."""
     import os
 
     from pyspark.sql import functions as F
@@ -1926,6 +1959,7 @@ def test_rebuild_ivf_index(spark, sf_dir, tmp_path_factory, pointer):
         resolve_data_dir,
     )
     from twitter_event_stream_spark.operators.vector_search import (
+        absorb_ingested,
         ivf_index_stats,
         ivf_topk_indexed,
         rebuild_ivf_index,
@@ -1939,9 +1973,7 @@ def test_rebuild_ivf_index(spark, sf_dir, tmp_path_factory, pointer):
     e = table(spark, sf_dir, "embeddings")
     root = str(tmp_path_factory.mktemp("ivfrebuild"))
     base = f"{root}/live"
-    write_ivf_index(
-        spark, e.filter(F.col("vec_id") % 2 == 0), base, pointer=pointer
-    )
+    write_ivf_index(spark, e.filter(F.col("vec_id") % 2 == 0), base)
     vector_ingest_batch(base)(
         e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "embedding"), 0
     )
@@ -1951,24 +1983,14 @@ def test_rebuild_ivf_index(spark, sf_dir, tmp_path_factory, pointer):
     n_all = e.filter(F.col("embedding").isNotNull()).count()
     assert rep["n_vectors"] == n_all
     assert rep["pending_batches_consumed"] == 1
-    # spill consumed: nothing pending; the rename swap drops the whole
-    # ingest dir with the old directory, the pointer path retires batches
-    # explicitly (the empty spill skeleton may remain)
+    # spill consumed: nothing pending. One-cycle grace retirement (r13):
+    # the consumed batch's manifest is gone but its data dir survives
+    # this pass for in-flight probes; the next maintenance pass reclaims
+    # it as a grace-expired orphan
     assert manifested_batch_ids(spark, f"{base}/ingest") == []
-    if not pointer:
-        assert not os.path.exists(f"{base}/ingest")
-    else:
-        # one-cycle grace retirement (r13): the consumed batch's manifest
-        # is gone (checked above) but its data dir survives this pass for
-        # in-flight probes; the next maintenance pass reclaims it as a
-        # grace-expired orphan
-        assert os.path.exists(f"{base}/ingest/batch=0")
-        from twitter_event_stream_spark.operators.vector_search import (
-            absorb_ingested,
-        )
-
-        absorb_ingested(spark, base)
-        assert not os.path.exists(f"{base}/ingest/batch=0")
+    assert os.path.exists(f"{base}/ingest/batch=0")
+    absorb_ingested(spark, base)
+    assert not os.path.exists(f"{base}/ingest/batch=0")
     stats = ivf_index_stats(spark, base).collect()
     assert sum(r.n_vectors for r in stats) == n_all
 
@@ -1979,16 +2001,16 @@ def test_rebuild_ivf_index(spark, sf_dir, tmp_path_factory, pointer):
     got = sorted(map(tuple, ivf_topk_indexed(spark, base, probes, k=5).collect()))
     want = sorted(map(tuple, ivf_topk_indexed(spark, fresh, probes, k=5).collect()))
     assert got == want and len(got) > 0
-    cent_got = sorted(
-        map(
-            tuple,
-            spark.read.parquet(
-                f"{resolve_data_dir(spark, base)}/centroids"
-            ).collect(),
+    cent_got, cent_want = (
+        sorted(
+            map(
+                tuple,
+                spark.read.parquet(
+                    f"{resolve_data_dir(spark, p)}/centroids"
+                ).collect(),
+            )
         )
-    )
-    cent_want = sorted(
-        map(tuple, spark.read.parquet(f"{fresh}/centroids").collect())
+        for p in (base, fresh)
     )
     assert cent_got == cent_want
 
@@ -2302,6 +2324,7 @@ def test_batch_append_apis_fenced_and_idempotent(
         MaintenanceLeaseHeld,
         acquire_maintenance_lease,
         release_maintenance_lease,
+        resolve_data_dir,
     )
     from twitter_event_stream_spark.operators.corpus_full import (
         _simhash_band_rows,
@@ -2339,14 +2362,17 @@ def test_batch_append_apis_fenced_and_idempotent(
     write_ivf_index(spark, half, ivf)
     assert maintenance_generation(spark, ivf) == g0 + 1
 
+    def ivf_cells():
+        return spark.read.parquet(f"{resolve_data_dir(spark, ivf)}/cells")
+
     append_ivf_index(spark, rest, ivf)
-    n_once = spark.read.parquet(f"{ivf}/cells").count()
+    n_once = ivf_cells().count()
     append_ivf_index(spark, rest, ivf)  # the retry after an aborted commit
-    assert spark.read.parquet(f"{ivf}/cells").count() == n_once, (
+    assert ivf_cells().count() == n_once, (
         "a retried append must not duplicate vectors"
     )
     assert (
-        spark.read.parquet(f"{ivf}/cells")
+        ivf_cells()
         .groupBy("vec_id")
         .count()
         .filter(F.col("count") > 1)
@@ -2370,11 +2396,14 @@ def test_batch_append_apis_fenced_and_idempotent(
 
     # crashed PARTIAL append: only bands 0-2 of the batch landed
     partial = _simhash_band_rows(simhash64(batch)).filter(F.col("band") < 3)
-    write_band_rows(partial, sidx, mode="append")
+    write_band_rows(partial, sidx)
     # the retried append heals band 3 without duplicating bands 0-2
     write_simhash_index(spark, batch, sidx, mode="append")
+    def band_rows():
+        return spark.read.parquet(resolve_data_dir(spark, sidx))
+
     per_doc = (
-        spark.read.parquet(sidx)
+        band_rows()
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -2383,9 +2412,9 @@ def test_batch_append_apis_fenced_and_idempotent(
     )
     bad = per_doc.filter((F.col("n") != 4) | (F.col("bands") != 4)).count()
     assert bad == 0, "every doc must hold exactly one row per band"
-    n_rows = spark.read.parquet(sidx).count()
+    n_rows = band_rows().count()
     write_simhash_index(spark, batch, sidx, mode="append")  # full retry
-    assert spark.read.parquet(sidx).count() == n_rows, (
+    assert band_rows().count() == n_rows, (
         "a retried append must not duplicate band rows"
     )
 
@@ -2403,6 +2432,7 @@ def test_commit_time_fence_text_gate(spark, tmp_path_factory, monkeypatch):
         MaintenanceLeaseHeld,
         maintenance_lease,
         manifested_batch_ids,
+        resolve_data_dir,
     )
     from twitter_event_stream_spark.operators.corpus_full import (
         write_simhash_index,
@@ -2446,7 +2476,9 @@ def test_commit_time_fence_text_gate(spark, tmp_path_factory, monkeypatch):
     got = pl.read_ingested(spark, out)
     assert got.count() == 1 and got.filter(F.col("doc_id") == 2).count() == 1
     # index holds doc 2's band rows exactly once (4 bands -> 4 rows)
-    idx_rows = spark.read.parquet(sidx).filter(F.col("doc_id") == 2)
+    idx_rows = spark.read.parquet(resolve_data_dir(spark, sidx)).filter(
+        F.col("doc_id") == 2
+    )
     assert idx_rows.count() == 4
 
 
@@ -2587,13 +2619,13 @@ def test_retention_passes_hold_the_lease(spark, tmp_path_factory):
     assert rep["folded"] == 3
 
 
-def test_pointer_layout_migration_and_streaming(spark, sf_dir, tmp_path_factory):
-    """r11 — the S3A-safe pointer-versioned layout end to end: a LEGACY
-    index is migrated in place by a `pointer_swap=True` compaction (same
-    rows, same verdicts, root path unchanged), streaming ingest keeps
-    composing with it (gate appends land in the current version), the
-    layout is forward-only, and the IVF twin migrates the same way with
-    absorb/rebuild staying pointer-published."""
+def test_pointer_layout_streaming(spark, sf_dir, tmp_path_factory):
+    """r11 — the pointer-versioned layout end to end: every build,
+    overwrite, compaction and rebuild publishes a new ``_v-*`` version
+    (root path unchanged, only ``_``-prefixed entries and the ingest
+    spill at root level), streaming ingest composes with it (gate appends
+    land in the current version), and the IVF twin stays coherent across
+    stream -> absorb -> compact -> rebuild."""
     import os
 
     from pyspark.sql import functions as F
@@ -2615,33 +2647,35 @@ def test_pointer_layout_migration_and_streaming(spark, sf_dir, tmp_path_factory)
     )
     from twitter_event_stream_spark.tables import table
 
-    root = str(tmp_path_factory.mktemp("ptrmig"))
+    root = str(tmp_path_factory.mktemp("ptrstream"))
 
-    # --- text index: legacy build + one gate batch, then migrate ---
+    def published(idx: str, prev: str | None = None) -> str:
+        cur = resolve_data_dir(spark, idx)
+        assert cur.startswith(f"{idx}/_v-") and cur != prev
+        assert all(
+            n.startswith(("_", ".")) or n == "ingest" for n in os.listdir(idx)
+        ), os.listdir(idx)
+        return cur
+
+    # --- text index: build, gate batch, compaction, overwrite ---
     sidx = f"{root}/simhash"
     out = f"{root}/corpus"
     d = table(spark, sf_dir, "documents")
     write_simhash_index(spark, d.filter(F.col("doc_id") % 3 == 0), sidx)
+    cur = published(sidx)
     probe = d.filter(F.col("doc_id") % 3 == 1).limit(100)
     before = sorted(
         map(tuple, dedup_against_index(spark, probe, sidx).collect())
     )
-    assert resolve_data_dir(spark, sidx) == sidx  # legacy resolves to root
-
-    rep = compact_band_rows(spark, sidx, pointer_swap=True)
+    rep = compact_band_rows(spark, sidx)
     assert rep["files_after"] == 4
-    cur = resolve_data_dir(spark, sidx)
-    assert cur != sidx and "/_v-" in cur
-    # legacy band dirs are gone from root level; only _-prefixed remain
-    assert not any(
-        n.startswith("band=") for n in os.listdir(sidx)
-    )
+    cur = published(sidx, cur)
     assert sorted(
         map(tuple, dedup_against_index(spark, probe, sidx).collect())
     ) == before
 
-    # gate batch against the MIGRATED index: appends land in the current
-    # version, replay protocol intact
+    # gate batch: appends land in the current version, replay protocol
+    # intact
     batch = d.filter(F.col("doc_id") % 3 == 2).limit(50)
     pl.dedup_ingest_batch(sidx, out)(batch, 0)
     assert pl.read_ingested(spark, out).count() > 0
@@ -2651,30 +2685,22 @@ def test_pointer_layout_migration_and_streaming(spark, sf_dir, tmp_path_factory)
         .count()
     )
     assert appended > 0  # survivors' band rows are in the live version
-
-    # a second compaction stays pointer-published (auto-detect) and the
-    # layout cannot be forced back
     rep2 = compact_band_rows(spark, sidx)
-    assert resolve_data_dir(spark, sidx) != cur  # new version dir
     assert rep2["files_after"] == 4
-    with pytest.raises(ValueError, match="pointer-versioned"):
-        compact_band_rows(spark, sidx, pointer_swap=False)
+    cur = published(sidx, cur)
 
-    # --- IVF twin: legacy build -> migrate -> stream -> absorb -> rebuild ---
+    # an overwrite with DIFFERENT content publishes a version readers see
+    write_simhash_index(spark, probe, sidx)
+    published(sidx, cur)
+    got = dedup_against_index(spark, probe, sidx, include_already_indexed=True)
+    assert got.filter(~F.col("already_indexed")).count() == 0
+
+    # --- IVF twin: build -> stream -> absorb -> compact -> rebuild ---
     ivf = f"{root}/ivf"
     e = table(spark, sf_dir, "embeddings")
     write_ivf_index(spark, e.filter(F.col("vec_id") % 2 == 0), ivf)
+    vcur = published(ivf)
     probes = e.filter(F.col("vec_id") < 20)
-    want = sorted(
-        map(tuple, ivf_topk_indexed(spark, ivf, probes, k=5).collect())
-    )
-    compact_ivf_cells(spark, ivf, pointer_swap=True)
-    vcur = resolve_data_dir(spark, ivf)
-    assert vcur != ivf and "/_v-" in vcur
-    assert not os.path.exists(f"{ivf}/cells")  # legacy tree cleaned
-    assert sorted(
-        map(tuple, ivf_topk_indexed(spark, ivf, probes, k=5).collect())
-    ) == want
 
     vbatch = e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "embedding")
     pl.vector_ingest_batch(ivf)(vbatch, 0)
@@ -2683,11 +2709,19 @@ def test_pointer_layout_migration_and_streaming(spark, sf_dir, tmp_path_factory)
     rep3 = absorb_ingested(spark, ivf)
     assert rep3["batches_absorbed"] == 1
     assert read_ivf_cells(spark, ivf).count() == n_all
+    want = sorted(
+        map(tuple, ivf_topk_indexed(spark, ivf, probes, k=5).collect())
+    )
+    compact_ivf_cells(spark, ivf)
+    vcur = published(ivf, vcur)
+    assert sorted(
+        map(tuple, ivf_topk_indexed(spark, ivf, probes, k=5).collect())
+    ) == want
 
-    rep4 = rebuild_ivf_index(spark, ivf)  # auto-detects pointer layout
+    rep4 = rebuild_ivf_index(spark, ivf)
     assert rep4["n_vectors"] == n_all
-    assert resolve_data_dir(spark, ivf) != vcur
-    # bit-identity with a fresh legacy build over the same visible set
+    published(ivf, vcur)
+    # bit-identity with a fresh build over the same visible set
     fresh = f"{root}/fresh"
     write_ivf_index(spark, e, fresh)
     got = sorted(
@@ -2696,71 +2730,6 @@ def test_pointer_layout_migration_and_streaming(spark, sf_dir, tmp_path_factory)
     assert got == sorted(
         map(tuple, ivf_topk_indexed(spark, fresh, probes, k=5).collect())
     )
-    with pytest.raises(ValueError, match="pointer-versioned"):
-        rebuild_ivf_index(spark, ivf, pointer_swap=False)
-
-
-def test_index_overwrite_autodetects_pointer_layout(
-    spark, sf_dir, tmp_path_factory
-):
-    """r11 — a full rebuild (`write_*_index(mode="overwrite")`) over an
-    existing pointer-versioned index must publish a fresh VERSION, not
-    write data to the legacy root position that resolving readers no
-    longer look at; forcing `pointer=False` onto a pointer layout raises."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from twitter_event_stream_spark.fsio import resolve_data_dir
-    from twitter_event_stream_spark.operators.corpus_full import (
-        dedup_against_index,
-        write_simhash_index,
-    )
-    from twitter_event_stream_spark.operators.vector_search import (
-        ivf_topk_indexed,
-        write_ivf_index,
-    )
-    from twitter_event_stream_spark.tables import table
-
-    root = str(tmp_path_factory.mktemp("autoptr"))
-
-    # text index
-    sidx = f"{root}/simhash"
-    d = table(spark, sf_dir, "documents")
-    write_simhash_index(spark, d.filter(F.col("doc_id") % 2 == 0), sidx,
-                        pointer=True)
-    v1 = resolve_data_dir(spark, sidx)
-    assert "/_v-" in v1
-    # overwrite with DIFFERENT content, no flags: auto-publishes a version
-    write_simhash_index(spark, d.filter(F.col("doc_id") % 2 == 1), sidx)
-    v2 = resolve_data_dir(spark, sidx)
-    assert "/_v-" in v2 and v2 != v1
-    assert not any(n.startswith("band=") for n in os.listdir(sidx))
-    probe = d.filter(F.col("doc_id") % 2 == 1).limit(20)
-    got = dedup_against_index(
-        spark, probe, sidx, include_already_indexed=True
-    )
-    # the probe docs ARE the new index content: all flagged already-indexed
-    assert got.filter(~F.col("already_indexed")).count() == 0
-    with pytest.raises(ValueError, match="pointer-versioned"):
-        write_simhash_index(spark, probe, sidx, pointer=False)
-
-    # vector twin
-    ivf = f"{root}/ivf"
-    e = table(spark, sf_dir, "embeddings")
-    write_ivf_index(spark, e.filter(F.col("vec_id") % 2 == 0), ivf,
-                    pointer=True)
-    w1 = resolve_data_dir(spark, ivf)
-    write_ivf_index(spark, e, ivf)  # full rebuild, no flags
-    w2 = resolve_data_dir(spark, ivf)
-    assert "/_v-" in w2 and w2 != w1
-    assert not os.path.exists(f"{ivf}/cells")
-    probes = e.filter(F.col("vec_id") < 10)
-    res = ivf_topk_indexed(spark, ivf, probes, k=3)
-    # odd vec_ids (absent from the first build) are now candidates
-    assert res.filter(F.col("cand_id") % 2 == 1).count() > 0
-    with pytest.raises(ValueError, match="pointer-versioned"):
-        write_ivf_index(spark, e, ivf, pointer=False)
 
 
 def test_pointer_swap_retains_previous_version(spark, tmp_path_factory):
@@ -2782,7 +2751,7 @@ def test_pointer_swap_retains_previous_version(spark, tmp_path_factory):
 
     path = str(tmp_path_factory.mktemp("grace")) + "/idx"
     d = table(spark, "/root/testdata/sf0.001", "documents")
-    write_simhash_index(spark, d.limit(50), path, pointer=True)
+    write_simhash_index(spark, d.limit(50), path)
 
     def versions():
         return sorted(n for n in os.listdir(path) if n.startswith("_v-"))
@@ -2810,17 +2779,21 @@ def test_pointer_swap_retains_previous_version(spark, tmp_path_factory):
 
 
 def test_resolve_data_dir_strict_errors(spark, tmp_path_factory):
-    """r11 — resolve falls back to the legacy interpretation ONLY for a
-    genuinely missing root; a root that HAS pointers but whose newest is
-    unreadable raises instead of silently misdirecting reads and appends
-    to the root position (which the next swap's cleanup would delete)."""
+    """r11 — a root with no ``_current-*`` pointer (missing, or a plain
+    directory) holds no index: readers get a clear FileNotFoundError
+    instead of scanning the root. A root that HAS pointers but whose
+    newest is unreadable raises too, instead of guessing a version — an
+    append sent down the build path would replace the live index."""
     import os
 
     from twitter_event_stream_spark.fsio import resolve_data_dir
 
     root = str(tmp_path_factory.mktemp("strict"))
     missing = f"{root}/never-created"
-    assert resolve_data_dir(spark, missing) == missing  # legacy fallback
+    with pytest.raises(FileNotFoundError, match="no index"):
+        resolve_data_dir(spark, missing)
+    with pytest.raises(FileNotFoundError, match="no index"):
+        resolve_data_dir(spark, root)  # exists, but holds no pointer
 
     broken = f"{root}/broken"
     os.makedirs(broken)
@@ -2852,8 +2825,7 @@ def test_probe_snapshot_coherence_across_rebuild(
     e = table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-    write_ivf_index(spark, e.filter(F.col("vec_id") % 2 == 0), ivf,
-                    pointer=True)
+    write_ivf_index(spark, e.filter(F.col("vec_id") % 2 == 0), ivf)
     probes = e.filter(F.col("vec_id") < 20)
     want_old = sorted(
         map(tuple, ivf_topk_indexed(spark, ivf, probes, k=5).collect())
@@ -3205,11 +3177,18 @@ def test_remove_if_stale_restore_no_clobber(spark, tmp_path_factory):
 def test_write_band_rows_overwrite_refuses_pointer_root(
     spark, tmp_path_factory
 ):
-    """r12 (r11 ADVICE) — write_band_rows(mode='overwrite') on a
-    pointer-versioned index would rewrite the LIVE _v-* dir in place with
-    no lease and no staged swap; it raises and points at
-    write_simhash_index, while appends keep composing."""
-    from twitter_event_stream_spark.fsio import resolve_data_dir
+    """r12 (r11 ADVICE) — no write into a SimHash index bypasses the
+    staged, leased publish: write_band_rows only appends (into the
+    current version, and raises where no index exists), and
+    write_simhash_index refuses any mode but 'overwrite' and 'append'
+    before writing anything. The first append to a missing index
+    publishes version 1 through the leased build path."""
+    import os
+
+    from twitter_event_stream_spark.fsio import (
+        maintenance_generation,
+        resolve_data_dir,
+    )
     from twitter_event_stream_spark.operators.corpus_full import (
         _simhash_band_rows,
         simhash64,
@@ -3223,28 +3202,29 @@ def test_write_band_rows_overwrite_refuses_pointer_root(
         [(1, "the quick brown fox jumps over the lazy dog")],
         "doc_id long, text string",
     )
-    write_simhash_index(spark, docs, sidx, pointer=True)
-    assert resolve_data_dir(spark, sidx) != sidx
-
     more = spark.createDataFrame(
         [(2, "an entirely different document about spark shuffles")],
         "doc_id long, text string",
     )
     rows = _simhash_band_rows(simhash64(more))
-    with pytest.raises(ValueError, match="pointer-versioned"):
-        write_band_rows(rows, sidx, mode="overwrite")
-    write_band_rows(rows, sidx, mode="append")  # appends stay fine
-    assert (
-        spark.read.parquet(resolve_data_dir(spark, sidx))
-        .filter(F.col("doc_id") == 2)
-        .count()
-        == 4
-    )
-    # the LEGACY layout keeps its overwrite path (write_simhash_index's
-    # own legacy publish goes through it)
-    legacy = f"{root}/legacy"
-    write_band_rows(rows, legacy, mode="overwrite")
-    assert spark.read.parquet(legacy).count() == 4
+    with pytest.raises(FileNotFoundError, match="no index"):
+        write_band_rows(rows, sidx)
+    for mode in ("error", "ignore", "errorifexists"):
+        with pytest.raises(ValueError, match="'overwrite' or 'append'"):
+            write_simhash_index(spark, docs, sidx, mode=mode)
+    assert not os.path.exists(sidx)
+
+    # first append to a missing index: version 1, published under the lease
+    write_simhash_index(spark, docs, sidx, mode="append")
+    assert resolve_data_dir(spark, sidx).startswith(f"{sidx}/_v-")
+    assert maintenance_generation(spark, sidx) == 1
+    write_band_rows(rows, sidx)  # appends land in the current version
+    live = spark.read.parquet(resolve_data_dir(spark, sidx))
+    assert live.filter(F.col("doc_id") == 2).count() == 4
+    assert live.count() == 8
+    with pytest.raises(ValueError, match="'overwrite' or 'append'"):
+        write_simhash_index(spark, docs, sidx, mode="error")
+    assert spark.read.parquet(resolve_data_dir(spark, sidx)).count() == 8
 
 
 def test_simhash_append_raises_on_unreadable_index(spark, tmp_path_factory):
@@ -3255,6 +3235,7 @@ def test_simhash_append_raises_on_unreadable_index(spark, tmp_path_factory):
     re-opening the unbounded-growth-under-crash-loops shape X126 closed)."""
     import glob
 
+    from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.corpus_full import (
         write_simhash_index,
     )
@@ -3281,7 +3262,7 @@ def test_simhash_append_raises_on_unreadable_index(spark, tmp_path_factory):
     # a genuinely MISSING index still bootstraps via append
     fresh = f"{root}/fresh"
     write_simhash_index(spark, batch, fresh, mode="append")
-    assert spark.read.parquet(fresh).count() == 4
+    assert spark.read.parquet(resolve_data_dir(spark, fresh)).count() == 4
 
 
 def test_heartbeat_is_ownership_probe(spark, tmp_path_factory):
@@ -3598,13 +3579,11 @@ def test_heartbeat_fallback_short_ttl(spark, tmp_path_factory, monkeypatch):
 
 
 def test_fresh_pointer_build_leased(spark, sf_dir, tmp_path_factory):
-    """r12 — fresh POINTER builds take the maintenance lease too: a
+    """r12 — fresh builds take the maintenance lease: a
     staged-but-uncommitted `_v-*` dir is visible to a racing swap's
     cleanup sweep, so two lease-free fresh builds racing could publish a
     dangling pointer; under the lease one publishes and the other fails
-    fast. Fresh LEGACY builds (plain write, no swap) stay lease-free."""
-    from pyspark.sql import functions as F
-
+    fast."""
     import twitter_event_stream_spark.fsio as fsio
     from twitter_event_stream_spark.operators.corpus_full import (
         write_simhash_index,
@@ -3618,33 +3597,126 @@ def test_fresh_pointer_build_leased(spark, sf_dir, tmp_path_factory):
     docs = table(spark, sf_dir, "documents").limit(40)
     vecs = table(spark, sf_dir, "embeddings").limit(40)
 
-    # under a held lease, a fresh pointer build refuses instead of staging
+    # under a held lease, a fresh build refuses instead of staging
     sidx = f"{root}/simhash"
     tok = fsio.acquire_maintenance_lease(spark, sidx, owner="rival")
     with pytest.raises(fsio.MaintenanceLeaseHeld, match="rival"):
-        write_simhash_index(spark, docs, sidx, pointer=True)
+        write_simhash_index(spark, docs, sidx)
     fsio.release_maintenance_lease(spark, sidx, lease_id=tok["lease_id"])
 
     ivf = f"{root}/ivf"
     tok = fsio.acquire_maintenance_lease(spark, ivf, owner="rival")
     with pytest.raises(fsio.MaintenanceLeaseHeld, match="rival"):
-        write_ivf_index(spark, vecs, ivf, pointer=True)
+        write_ivf_index(spark, vecs, ivf)
     fsio.release_maintenance_lease(spark, ivf, lease_id=tok["lease_id"])
 
-    # without a rival the fresh pointer builds succeed and release clean
-    write_simhash_index(spark, docs, sidx, pointer=True)
+    # without a rival the fresh builds succeed and release clean
+    write_simhash_index(spark, docs, sidx)
     assert "/_v-" in fsio.resolve_data_dir(spark, sidx)
     assert fsio.read_maintenance_lease(spark, sidx) is None
-    write_ivf_index(spark, vecs, ivf, pointer=True)
+    write_ivf_index(spark, vecs, ivf)
     assert "/_v-" in fsio.resolve_data_dir(spark, ivf)
     assert fsio.read_maintenance_lease(spark, ivf) is None
 
-    # fresh LEGACY builds never touch the lease even when one is held
-    lidx = f"{root}/legacy"
-    tok = fsio.acquire_maintenance_lease(spark, lidx, owner="rival")
-    write_simhash_index(spark, docs, lidx)  # lease-free by design
-    assert fsio.read_maintenance_lease(spark, lidx)["owner"] == "rival"
-    fsio.release_maintenance_lease(spark, lidx, lease_id=tok["lease_id"])
+
+def test_lease_and_build_under_missing_parent(
+    spark, sf_dir, tmp_path_factory, monkeypatch
+):
+    """The lease file is a sibling of the index, so a build into a new
+    directory tree takes it before the index's parent exists: the acquire
+    creates the parent instead of reporting the missing directory as a
+    held lease, and a create failure that is not "already exists"
+    re-raises as itself rather than as MaintenanceLeaseHeld."""
+    import twitter_event_stream_spark.fsio as fsio
+    from twitter_event_stream_spark.operators.corpus_full import (
+        write_simhash_index,
+    )
+    from twitter_event_stream_spark.operators.vector_search import (
+        write_ivf_index,
+    )
+    from twitter_event_stream_spark.tables import table
+
+    root = str(tmp_path_factory.mktemp("noparent"))
+    deep = f"{root}/a/b/idx"
+    tok = fsio.acquire_maintenance_lease(spark, deep, owner="t")
+    assert fsio.read_maintenance_lease(spark, deep)["owner"] == "t"
+    fsio.release_maintenance_lease(spark, deep, lease_id=tok["lease_id"])
+
+    sidx = f"{root}/new/tree/simhash"
+    docs = table(spark, sf_dir, "documents").limit(40)
+    write_simhash_index(spark, docs, sidx)
+    assert fsio.resolve_data_dir(spark, sidx).startswith(f"{sidx}/_v-")
+    ivf = f"{root}/other/tree/ivf"
+    write_ivf_index(spark, table(spark, sf_dir, "embeddings").limit(40), ivf)
+    assert fsio.resolve_data_dir(spark, ivf).startswith(f"{ivf}/_v-")
+
+    def refuse(spark_, fs, hp):
+        raise PermissionError(f"permission denied: {hp}")
+
+    monkeypatch.setattr(fsio, "_exclusive_create", refuse)
+    with pytest.raises(PermissionError, match="permission denied"):
+        fsio.acquire_maintenance_lease(spark, f"{root}/c/idx", owner="t")
+
+
+def test_first_append_refuses_concurrent_build(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A first append decides "no index yet" before it takes the lease; an
+    index published in between must make it raise (the caller retries
+    and appends) instead of publishing a version 1 that replaces the
+    racing build's rows."""
+    import twitter_event_stream_spark.fsio as fsio
+    from twitter_event_stream_spark.operators.corpus_full import (
+        write_simhash_index,
+    )
+
+    sidx = f"{tmp_path_factory.mktemp('firstappend')}/simhash"
+    built = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    )
+    batch = spark.createDataFrame(
+        [(2, "an entirely different document about spark shuffles")],
+        "doc_id long, text string",
+    )
+    write_simhash_index(spark, built, sidx)
+    live = fsio.resolve_data_dir(spark, sidx)
+
+    # the append's off-lease probe runs before the racing build published
+    real = fsio._current_version
+    calls = {"n": 0}
+
+    def stale_first_probe(spark_, root):
+        calls["n"] += 1
+        return None if calls["n"] == 1 else real(spark_, root)
+
+    monkeypatch.setattr(fsio, "_current_version", stale_first_probe)
+    with pytest.raises(fsio.MaintenanceLeaseHeld, match="built concurrently"):
+        write_simhash_index(spark, batch, sidx, mode="append")
+    assert fsio.resolve_data_dir(spark, sidx) == live
+    assert fsio.read_maintenance_lease(spark, sidx) is None
+
+    monkeypatch.setattr(fsio, "_current_version", real)
+    write_simhash_index(spark, batch, sidx, mode="append")  # the retry
+    ids = {r.doc_id for r in spark.read.parquet(live).collect()}
+    assert ids == {1, 2}
+
+
+def test_default_cpus_is_the_one_source(monkeypatch):
+    """``get_spark`` and the bench headline size and report the session
+    from one resolution: ``$SPARK_GRAFT_CPUS``, else the OS core count,
+    else 4."""
+    import os
+
+    from twitter_event_stream_spark.session import default_cpus
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    monkeypatch.setattr(os, "cpu_count", lambda: 6)
+    assert default_cpus() == 6
+    monkeypatch.setattr(os, "cpu_count", lambda: None)
+    assert default_cpus() == 4
 
 
 def test_pointer_swap_detects_swept_stage(spark, tmp_path_factory, monkeypatch):
@@ -4687,120 +4759,6 @@ def test_cas_marker_heartbeat_reclaims_torn_marker(
     # marker) — never someone else's, never torn again
     if os.path.exists(mp):
         assert json.loads(open(mp).read()).get("breaker") == "me"
-
-
-def test_overwrite_publish_legacy_vs_pointer_thread_race(
-    spark, tmp_path_factory
-):
-    """r13 (r12 verdict task #3) — TRUE-concurrency coverage for
-    overwrite_publish's TOCTOU branches (previously injection-only): a
-    fresh LEGACY build races a POINTER migration of the same index from
-    two threads. Every legal interleaving must land in a coherent state:
-
-    - the pointer build (runs under the lease) always succeeds;
-    - the legacy build either succeeds or raises MaintenanceLeaseHeld
-      (the sanctioned 'retry' signal from the became-pointer-mid-start /
-      post-write re-check fences) — never a silent wrong outcome;
-    - the final RESOLVED data dir contains exactly ONE complete payload,
-      never a mix and never nothing (last-writer-wins is the overwrite
-      contract; losing a build without either a success-for-it or a
-      retry signal would be the bug);
-    - when the legacy build was told to retry, the live payload is the
-      pointer build's;
-    - the lease is released and the generation counter moved.
-
-    Rounds vary a sleep inside the legacy writer to push the
-    interleaving through the lease-free window, the mid-start flip, and
-    the post-write re-check."""
-    import os
-    import threading
-    import time
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    root = str(tmp_path_factory.mktemp("ow-race"))
-
-    def make_writer(tag: str, delay: float):
-        def write_to(target: str) -> None:
-            os.makedirs(target, exist_ok=True)
-            with open(f"{target}/payload.txt", "w") as f:
-                f.write(tag)
-            if delay:
-                time.sleep(delay)
-            with open(f"{target}/payload2.txt", "w") as f:
-                f.write(tag)
-        return write_to
-
-    for rnd, delay in enumerate((0.0, 0.05, 0.15)):
-        path = f"{root}/index-{rnd}"
-        barrier = threading.Barrier(2)
-        outcome: dict = {}
-
-        def legacy_build():
-            barrier.wait()
-            try:
-                fsio.overwrite_publish(
-                    spark, path, pointer=None, owner="legacy",
-                    write_to=make_writer("A", delay),
-                )
-                outcome["a"] = "ok"
-            except fsio.MaintenanceLeaseHeld:
-                outcome["a"] = "retry"
-
-        def pointer_build():
-            barrier.wait()
-            try:
-                fsio.overwrite_publish(
-                    spark, path, pointer=True, owner="ptr",
-                    write_to=make_writer("B", 0.0),
-                )
-                outcome["b"] = "ok"
-            except fsio.MaintenanceLeaseHeld:
-                outcome["b"] = "retry"
-
-        threads = [
-            threading.Thread(target=legacy_build),
-            threading.Thread(target=pointer_build),
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=60)
-        assert not any(t.is_alive() for t in threads)
-
-        assert outcome.get("b") == "ok", (
-            f"round {rnd}: the leased pointer build must succeed: {outcome}"
-        )
-        assert outcome.get("a") in ("ok", "retry"), (
-            f"round {rnd}: legacy build must succeed or be told to "
-            f"retry, never fail otherwise: {outcome}"
-        )
-
-        live = fsio.resolve_data_dir(spark, path)
-        assert live != path, (
-            f"round {rnd}: the pointer migration must leave the pointer "
-            "layout in effect"
-        )
-        contents = set()
-        for fname in ("payload.txt", "payload2.txt"):
-            fp = os.path.join(live, fname)
-            assert os.path.exists(fp), (
-                f"round {rnd}: live version incomplete: missing {fname} "
-                f"(a={outcome.get('a')})"
-            )
-            contents.add(open(fp).read())
-        assert len(contents) == 1 and contents <= {"A", "B"}, (
-            f"round {rnd}: live version mixes payloads: {contents}"
-        )
-        if outcome["a"] == "retry":
-            assert contents == {"B"}, (
-                f"round {rnd}: legacy build was told to retry, so the "
-                f"pointer build's payload must be live, got {contents}"
-            )
-        assert fsio.read_maintenance_lease(spark, path) is None, (
-            f"round {rnd}: lease must be released after both publishes"
-        )
-        assert fsio.maintenance_generation(spark, path) >= 1
 
 
 def test_corrupt_lease_decays_via_mtime(spark, tmp_path_factory):

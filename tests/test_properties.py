@@ -1126,6 +1126,7 @@ def test_ingest_commit_protocol_random_crash_interleavings(spark, scenario):
     import shutil
     import tempfile
 
+    from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.corpus_full import (
         write_simhash_index,
     )
@@ -1181,9 +1182,17 @@ def test_ingest_commit_protocol_random_crash_interleavings(spark, scenario):
         # appends were either absorbed by replay determinism or never
         # happened; nothing extra, nothing missing)
         got_idx = sorted(
-            map(tuple, spark.read.parquet(idx).collect())
+            map(
+                tuple,
+                spark.read.parquet(resolve_data_dir(spark, idx)).collect(),
+            )
         )
-        want_idx = sorted(map(tuple, spark.read.parquet(g_idx).collect()))
+        want_idx = sorted(
+            map(
+                tuple,
+                spark.read.parquet(resolve_data_dir(spark, g_idx)).collect(),
+            )
+        )
         assert got_idx == want_idx
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1244,21 +1253,16 @@ def _vector_crash_scenarios(draw):
 
 
 @pytest.mark.deep
-@pytest.mark.parametrize("pointer", [False, True], ids=["rename", "pointer"])
 @settings(**{**_SETTINGS, "max_examples": 4})
 @given(_vector_crash_scenarios())
-def test_vector_protocol_random_crash_interleavings(
-    spark, sf_dir, pointer, scenario
-):
+def test_vector_protocol_random_crash_interleavings(spark, sf_dir, scenario):
     """r10 — the X123 protocol as a functional spec over random
     compositions of publish/manifest crashes, replays, absorb, CRASHED
     absorb, and post-absorb retries, with OVERLAPPING batches (cross-batch
     redelivery): after every event the visible distinct vec_id set equals
     base ∪ committed batches; after every completed absorb the tree holds
     no duplicate; and the final probe results equal a fresh index built
-    over the same visible set. r11: parameterized over BOTH index layouts
-    — the pointer-versioned (S3A-safe) variant must satisfy the identical
-    functional spec, since absorb/ingest resolve through the pointer."""
+    over the same visible set."""
     import shutil
     import tempfile
 
@@ -1296,7 +1300,7 @@ def test_vector_protocol_random_crash_interleavings(
     root = tempfile.mkdtemp(prefix="vecprop")
     idx = f"{root}/idx"
     try:
-        write_ivf_index(spark, base_df, idx, pointer=pointer)
+        write_ivf_index(spark, base_df, idx)
         committed: set[int] = set()
 
         def cells_dir():
@@ -1359,7 +1363,7 @@ def test_vector_protocol_random_crash_interleavings(
             _stored_centroid_bc,
         )
 
-        bc = _stored_centroid_bc(spark, idx)
+        bc = _stored_centroid_bc(spark, resolve_data_dir(spark, idx))
         visible_vecs = e.filter(
             F.col("vec_id").isin(
                 list(base_ids.union(*(ids_of[b] for b in committed)))

@@ -937,6 +937,7 @@ def test_dedup_ingest_intra_batch(spark, tmp_path_factory):
     larger is suppressed; unrelated docs pass."""
     from pyspark.sql import functions as F
 
+    from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.corpus_full import (
         write_simhash_index,
     )
@@ -967,7 +968,9 @@ def test_dedup_ingest_intra_batch(spark, tmp_path_factory):
     assert out_ids == {10, 30}, out_ids  # min-id survives, copy suppressed
     idx_ids = {
         r.doc_id
-        for r in spark.read.parquet(f"{base}/idx").select("doc_id").collect()
+        for r in spark.read.parquet(resolve_data_dir(spark, f"{base}/idx"))
+        .select("doc_id")
+        .collect()
     }
     assert idx_ids == {1, 10, 30}, idx_ids  # only survivors were appended
     # audit trail: one minimal verdict per reject, reason by where the
@@ -1571,6 +1574,7 @@ def test_absorb_ingested_crash_replay_idempotent(spark, sf_dir, tmp_path_factory
     the manifest deletes must not duplicate vectors on re-run — the re-run
     detects the already-appended vec_ids (anti-join against the touched
     cells) and appends nothing, then retires the manifests."""
+    from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.vector_search import (
         _read_pending,
         absorb_ingested,
@@ -1597,14 +1601,14 @@ def test_absorb_ingested_crash_replay_idempotent(spark, sf_dir, tmp_path_factory
     # simulate the crashed absorb: the append committed, manifests intact
     _read_pending(spark, base, [0]).write.mode("append").partitionBy(
         "cell"
-    ).parquet(f"{base}/cells")
+    ).parquet(f"{resolve_data_dir(spark, base)}/cells")
     # the crash window itself: vectors transiently visible twice
     assert read_ivf_cells(spark, base).count() > n_all
 
     # recovery re-run: appends nothing, retires the batch, no duplicates
     rep = absorb_ingested(spark, base)
     assert rep == {"batches_absorbed": 1, "vectors_absorbed": 0}
-    cells = spark.read.parquet(f"{base}/cells")
+    cells = spark.read.parquet(f"{resolve_data_dir(spark, base)}/cells")
     assert cells.count() == n_all
     assert cells.select("vec_id").distinct().count() == n_all
     res_after = sorted(
@@ -1621,6 +1625,7 @@ def test_vector_ingest_replay_after_absorb_converges(spark, sf_dir, tmp_path_fac
     in TWO pending batches is folded once by absorb."""
     import os
 
+    from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.vector_search import (
         absorb_ingested,
         ivf_topk_indexed,
@@ -1666,7 +1671,7 @@ def test_vector_ingest_replay_after_absorb_converges(spark, sf_dir, tmp_path_fac
     assert read_ivf_cells(spark, base).count() == n_all + 2 * n_re
     rep = absorb_ingested(spark, base)
     assert rep["batches_absorbed"] == 2 and rep["vectors_absorbed"] == n_re
-    cells = spark.read.parquet(f"{base}/cells")
+    cells = spark.read.parquet(f"{resolve_data_dir(spark, base)}/cells")
     assert cells.count() == n_all + n_re
     assert cells.select("vec_id").distinct().count() == n_all + n_re
 

@@ -427,13 +427,11 @@ def index_maintenance_probe(spark, sf_dir: str) -> tuple[float, dict]:
     one clustered shuffle of the whole band-row table, the corpus-sized
     term — so the timed op is ``compact_band_rows`` over a full-corpus
     index fragmented by three appends (the build/append passes are setup,
-    untimed). r11: the compaction publishes through the POINTER-VERSIONED
-    path (``pointer_swap=True``, the X128 S3A-safe seam, migrating the
-    legacy fixture in the same pass) so the new swap mechanism's overhead
-    — one staged version dir + a pointer-file create + root cleanup — is
-    measured at 10× too; it is metadata-scale, so the lane's ~linear
-    corpus shape must not move. The returned report also shows the
-    reclaim (files_before → 4)."""
+    untimed). The compaction publishes a new version through the pointer
+    flip, whose own overhead — one staged version dir + a pointer-file
+    create + cleanup — is metadata-scale, so the lane's ~linear corpus
+    shape must not move. The returned report also shows the reclaim
+    (files_before → 4)."""
     import tempfile
 
     from twitter_event_stream_spark.operators.corpus_full import (
@@ -456,7 +454,7 @@ def index_maintenance_probe(spark, sf_dir: str) -> tuple[float, dict]:
                 mode="append",
             )
         t = time.perf_counter()
-        rep = compact_band_rows(spark, f"{base}/idx", pointer_swap=True)
+        rep = compact_band_rows(spark, f"{base}/idx")
         dt = time.perf_counter() - t
         rep = dict(rep)
         rep.update(_heartbeat_under_inert_settimes(spark, f"{base}/idx"))
@@ -544,17 +542,12 @@ def soak_probe(
       foreachBatch retry contract, driven by hand;
     - vector ingester: same through ``vector_ingest_batch`` into a
       persisted IVF index;
-    - maintenance: a rotating pass every ~2s — ``compact_band_rows``
-      (pointer swap), ``absorb_ingested``, ``compact_ivf_cells`` — each
+    - maintenance: a rotating pass every ~2s — ``compact_band_rows``,
+      ``absorb_ingested``, ``compact_ivf_cells`` — each
       skipped (counted) when another op holds the lease; passes are
       spaced wider than any probe, per the documented grace-window rule;
     - prober: continuous ``ivf_topk_indexed`` + ``dedup_against_index``
       against the live indexes; every exception is recorded.
-
-    Both indexes are built POINTER-VERSIONED up front: the legacy→pointer
-    migration is documented quiesced-only (its root-level cleanup is
-    immediate), and this lane exists to exercise the supported concurrent
-    protocol, not the unsupported one.
 
     Converged invariants, asserted after the window:
       * probes never erred and completed > 0 times;
@@ -647,8 +640,8 @@ def soak_probe(
         )
         d_even = d.filter(F.col("doc_id") % 2 == 0)
         e_even = e.filter(F.col("vec_id") % 2 == 0)
-        write_simhash_index(spark, d_even, sidx, pointer=True)
-        write_ivf_index(spark, e_even, ividx, pointer=True)
+        write_simhash_index(spark, d_even, sidx)
+        write_ivf_index(spark, e_even, ividx)
 
         def slices(df, id_col, per_batch):
             pool = (
@@ -826,11 +819,9 @@ def soak_probe(
 
         def maintenance():
             ops = (
-                ("compact_band_rows",
-                 lambda: compact_band_rows(spark, sidx, pointer_swap=True)),
+                ("compact_band_rows", lambda: compact_band_rows(spark, sidx)),
                 ("absorb_ingested", lambda: absorb_ingested(spark, ividx)),
-                ("compact_ivf_cells",
-                 lambda: compact_ivf_cells(spark, ividx, pointer_swap=True)),
+                ("compact_ivf_cells", lambda: compact_ivf_cells(spark, ividx)),
             )
 
             def _progress():

@@ -40,9 +40,9 @@ Stalled holder (paused past TTL)       per-beat OWNERSHIP probe:           test_
   lease after break+retake             = counted failure, no touch
 Pointer commit clobbers a racing       no-clobber commit + sequence        test_pointer_commit_no_clobber
   commit (rename(2) replaces)          renumber retry
-Racing swap's cleanup sweeps a         ALL stage+swap paths hold the       test_fresh_pointer_build_leased
-  staged-but-uncommitted _v-* dir,     lease, incl. fresh pointer builds
-  committing a dangling pointer        (r12); post-commit staged-exists
+Racing swap's cleanup sweeps a         every publish (build, rebuild,      test_fresh_pointer_build_leased
+  staged-but-uncommitted _v-* dir,     compaction) holds the lease;
+  committing a dangling pointer        post-commit staged-exists
                                        re-check retracts + raises
 Restore of a displaced fresh lease     shared restore helper retries,      test_restore_displaced_*
   THROWS (transient IO) and the tomb   then LEAVES the tomb — never
@@ -63,11 +63,6 @@ Transient read error at release        present-but-unreadable lease        test_
   or deletes an unreadable tomb that   tomb read retried (spaced), then
   is a successor's live lease          RESTORED — never deleted on a
                                        read error
-Legacy->pointer migration lands        layout re-derived UNDER the         test_fresh_pointer_build_leased
-  between an overwrite's pre-lease     lease inside _publish; off-lease
-  layout probe and its acquisition     flip to pointer raises, retry
-  (rewrite targets the shadowed        re-probes
-  legacy root)
 Flat 1s still-fresh grace defers the   grace bounded by min(1s, TTL/4)     test_heartbeat_fallback_short_ttl
   rewrite past short TTLs (inert
   setTimes: breakable while live)
@@ -176,13 +171,14 @@ def data_file_count(spark, path: str) -> int:
     parquet footer reads, task scheduling), not byte count, so the
     maintenance decision watches files, not rows.
 
-    Resolves a pointer-versioned root (r11) to its CURRENT version first:
-    the recursive listing checks only file NAMES against the ``_``/``.``
-    exclusion, so counting the root directly would also sweep up the
-    grace-retained previous version's files inside ``_v-*`` dirs and
-    overstate the live index — the compaction trigger must watch what
-    probes actually read."""
-    path = resolve_data_dir(spark, path)
+    An index ROOT is resolved to its CURRENT version first: the recursive
+    listing checks only file NAMES against the ``_``/``.`` exclusion, so
+    counting the root directly would also sweep up the grace-retained
+    previous version's files inside ``_v-*`` dirs and overstate the live
+    index — the compaction trigger must watch what probes actually read.
+    Any other directory (a version dir, its ``cells`` subtree) is counted
+    as given."""
+    path = _current_version(spark, path) or path
     fs, hpath = _fs(spark, path)
     it = fs.listFiles(hpath(path), True)
     n = 0
@@ -200,12 +196,11 @@ def atomic_swap_dir(spark, live: str, fresh: str) -> None:
     resolve either the old file set or the new one — never a mix of both
     (a reader that already listed the old files keeps reading them; POSIX
     and HDFS keep renamed-away files readable through open handles). On
-    S3A a "rename" is copy+delete and NOT atomic — use the
-    pointer-versioned layout there instead (:func:`pointer_swap_dir` +
-    :func:`resolve_data_dir`, r11: the swap becomes one small-file
-    create); every maintenance op that swaps exposes it via
-    ``pointer_swap=True``. If the second rename fails the old dir is
-    restored, so a crashed swap never leaves the index missing."""
+    S3A a "rename" is copy+delete and NOT atomic. If the second rename
+    fails the old dir is restored, so a crashed swap never leaves the
+    directory missing. Persisted indexes never swap directories — they
+    publish versions through :func:`pointer_swap_dir`; this serves the
+    per-batch sink republish (``streaming.pipelines._publish_atomic``)."""
     fs, hpath = _fs(spark, live)
     old = hpath(f"{live}.old-{uuid.uuid4().hex}")
     if not fs.rename(hpath(live), old):
@@ -243,29 +238,55 @@ def _pointer_seq(name: str) -> int | None:
     return None
 
 
+def _current_version(spark, root: str) -> str | None:
+    """The live version directory of the index at ``root``, or None when
+    there is no index there (``root`` missing, or holding no
+    ``_current-<n>`` pointer). The HIGHEST-numbered pointer names the live
+    ``root/_v-<id>``. Crash windows read consistently — an extra
+    not-yet-deleted pointer loses to the newest by max(), a pointer is
+    only ever created AFTER its version dir is fully written, and a
+    pointer deleted by swap cleanup between our listing and our read
+    triggers ONE re-list (a newer pointer exists by construction).
+
+    Only a genuinely MISSING root or an absent pointer means "no index";
+    any other listing/read failure raises (r11): mapping a transient IO
+    error to "no index" would send an append down the build path and
+    publish a version that replaces the live one — loud beats lossy."""
+    fs, hpath = _fs(spark, root)
+    last_err: Exception | None = None
+    for _ in (0, 1):
+        best, best_ptr = -1, None
+        try:
+            statuses = fs.listStatus(hpath(root))
+        except Exception as e:
+            if "FileNotFoundException" in str(e):
+                return None
+            raise
+        for st in statuses:
+            seq = _pointer_seq(st.getPath().getName())
+            if seq is not None and seq > best:
+                best, best_ptr = seq, st.getPath()
+        if best_ptr is None:
+            return None
+        try:
+            version = _read_json_file(fs, best_ptr)["version"]
+        except Exception as e:
+            last_err = e
+            continue  # pointer cleaned up under us: re-list once
+        return f"{root}/{version}"
+    raise IOError(
+        f"{root} has _current-* pointers but the newest is unreadable "
+        "twice in a row — refusing to guess the live version"
+    ) from last_err
+
+
 def resolve_data_dir(spark, root: str) -> str:
-    """Physical data directory of a possibly POINTER-VERSIONED index root
-    (r10 verdict "What's missing" #2 — the S3A-safe layout the swap
-    docstrings pointed at, made real): when ``root`` holds ``_current-<n>``
-    pointer files, the HIGHEST-numbered one names the live version
-    directory (``root/_v-<id>``) and that is returned; with no pointer the
-    legacy layout is in effect and ``root`` itself is the data dir.
-
-    Every reader/appender of a persisted index resolves through this, so
-    the two layouts coexist: ``_``-prefixed version dirs and pointers are
-    invisible to a plain recursive parquet scan of a legacy dir, and a
-    migrated dir keeps its public path. Crash windows read consistently —
-    an extra not-yet-deleted pointer loses to the newest by max(), a
-    pointer is only ever created AFTER its version dir is fully written,
-    and a pointer deleted by swap cleanup between our listing and our
-    read triggers ONE re-list (a newer pointer exists by construction).
-
-    Only a genuinely MISSING root falls back to the legacy
-    interpretation; any other listing/read failure raises (r11). Mapping
-    transient IO errors to "legacy" would silently point an APPEND at the
-    root position — invisible to pointer-resolving readers and deleted by
-    the next swap's legacy cleanup — i.e. a lost write; loud beats
-    lossy.
+    """Physical data directory of the persisted index at ``root``: the
+    ``root/_v-<id>`` version its newest ``_current-<n>`` pointer names
+    (:func:`_current_version`). Every reader and appender resolves through
+    this; a root with no pointer holds no index and raises
+    :class:`FileNotFoundError` — build it with ``write_ivf_index`` /
+    ``write_simhash_index`` first.
 
     Known COSMETIC log line (r14, diagnosed from the soak lane's output):
     reading a PARTITIONED ``_v-*`` dir makes Spark's ``DataSource`` log
@@ -277,49 +298,26 @@ def resolve_data_dir(spark, root: str) -> str:
     a genuinely empty or half-deleted dir raises UNABLE_TO_INFER_SCHEMA
     loudly instead — there is no silent-empty-read hazard behind the
     warning."""
-    fs, hpath = _fs(spark, root)
-    last_err: Exception | None = None
-    for _ in (0, 1):
-        best, best_ptr = -1, None
-        try:
-            statuses = fs.listStatus(hpath(root))
-        except Exception as e:
-            if "FileNotFoundException" in str(e):
-                return root  # no root yet: legacy (or first build) — fine
-            raise
-        for st in statuses:
-            seq = _pointer_seq(st.getPath().getName())
-            if seq is not None and seq > best:
-                best, best_ptr = seq, st.getPath()
-        if best_ptr is None:
-            return root
-        try:
-            version = _read_json_file(fs, best_ptr)["version"]
-        except Exception as e:
-            last_err = e
-            continue  # pointer cleaned up under us: re-list once
-        return f"{root}/{version}"
-    raise IOError(
-        f"{root} has _current-* pointers but the newest is unreadable "
-        "twice in a row — refusing the legacy fallback, which would "
-        "misdirect reads and appends"
-    ) from last_err
+    cur = _current_version(spark, root)
+    if cur is None:
+        raise FileNotFoundError(
+            f"no index at {root}: it holds no _current-* version pointer"
+        )
+    return cur
 
 
 def stage_version_dir(root: str) -> str:
     """A fresh version-directory path under ``root`` for a pointer-swap
-    publish: ``_``-prefixed, so legacy readers scanning ``root`` never see
-    it, and unique, so concurrent stagings never collide."""
+    publish: ``_``-prefixed, so a recursive parquet scan never sees it,
+    and unique, so concurrent stagings never collide."""
     return f"{root.rstrip('/')}/_v-{uuid.uuid4().hex}"
 
 
-def pointer_swap_dir(spark, root: str, staged: str, keep: tuple = ()) -> None:
+def pointer_swap_dir(spark, root: str, staged: str) -> None:
     """Publish ``staged`` (a fully-written ``root/_v-*`` dir, from
     :func:`stage_version_dir`) as ``root``'s live data directory by
     creating the next ``_current-<n>`` pointer file — then clean up older
-    pointers, older version dirs, and any LEGACY data entries at root
-    level (except names in ``keep``, e.g. an ingest spill area that lives
-    beside the versions).
+    pointers and older version dirs.
 
     This is the object-store-safe swap: the commit is the CREATION of one
     new small file (tmp + rename-to-fresh-name locally — atomic; a single
@@ -336,15 +334,15 @@ def pointer_swap_dir(spark, root: str, staged: str, keep: tuple = ()) -> None:
     extra storage: one version, reclaimed by the next swap). Cleanup
     failures are harmless: stragglers are invisible to resolution (older
     pointers lose to max; version dirs are only reachable via pointers)
-    and the next swap retries the deletes. The MIGRATION cleanup (legacy
-    root-level data files) is immediate — run a legacy→pointer migration
-    quiesced on object stores. Callers MUST hold the maintenance lease
-    around stage+swap — every engine caller does, INCLUDING fresh pointer
-    builds (r12): a staged-but-uncommitted ``_v-*`` dir is visible to a
-    racing swap's cleanup sweep, and only the lease keeps stage+commit
-    single-sequencer. The commit itself still refuses to clobber an
-    existing pointer name (:func:`_rename_no_clobber`, r12 — plain
-    rename silently replaces on local FS) and retries at the next
+    and the next swap retries the deletes. Non-version entries beside the
+    versions (the IVF ingest spill) are never touched. Callers MUST hold
+    the maintenance lease around stage+swap — :func:`publish_version`
+    is the one engine caller, and every build, rebuild and compaction
+    runs it under the lease (r12): a staged-but-uncommitted ``_v-*`` dir
+    is visible to a racing swap's cleanup sweep, and only the lease keeps
+    stage+commit single-sequencer. The commit itself still refuses to
+    clobber an existing pointer name (:func:`_rename_no_clobber`, r12 —
+    plain rename silently replaces on local FS) and retries at the next
     sequence number, and a post-commit re-check retracts the pointer and
     raises when the staged dir was swept from under an off-lease racer —
     mechanical backstops that turn an unsupported lease-free race into a
@@ -398,8 +396,8 @@ def pointer_swap_dir(spark, root: str, staged: str, keep: tuple = ()) -> None:
         # committed dangles. Best-effort retract it (readers fall back to
         # the racer's live pointer instead of 404ing) and fail LOUD —
         # engine callers hold the maintenance lease around stage+swap
-        # (r12, including fresh pointer builds), which prevents this;
-        # the check is a detection net for direct off-lease callers.
+        # (r12, :func:`publish_version`), which prevents this; the check
+        # is a detection net for direct off-lease callers.
         # The retract itself can fail (transient IO); if it does, the
         # dangling pointer STAYS LIVE and readers resolving it will 404 —
         # the exact outcome this check exists to prevent — so retry once
@@ -434,7 +432,7 @@ def pointer_swap_dir(spark, root: str, staged: str, keep: tuple = ()) -> None:
             )
         raise IOError(msg)
     # cleanup AFTER the commit: all best-effort, all invisible to readers
-    keep_names = set(keep) | {vname}
+    keep_names = {vname}
     if prev_vname is not None:
         keep_names.add(prev_vname)  # one-cycle grace for in-flight probes
     statuses = list(fs.listStatus(hpath(root)))
@@ -454,95 +452,36 @@ def pointer_swap_dir(spark, root: str, staged: str, keep: tuple = ()) -> None:
         seq = _pointer_seq(name)
         if seq is not None and seq < best:
             fs.delete(st.getPath(), False)  # keep prev + new pointers
-        elif seq is not None:
-            pass  # the previous, the just-committed, and any newer pointer
-        elif name.startswith("_v-") and name not in keep_names:
-            if not prev_unreadable:
-                fs.delete(st.getPath(), True)
         elif (
-            not name.startswith(("_", "."))
+            seq is None
+            and name.startswith("_v-")
             and name not in keep_names
+            and not prev_unreadable
         ):
-            # legacy root-level data (pre-migration layout): now shadowed
-            # by the pointer, delete so a plain scan can't resurrect it
             fs.delete(st.getPath(), True)
 
 
-def overwrite_publish(
-    spark, path: str, pointer: bool | None, owner: str, write_to, keep=()
-) -> None:
-    """The ONE overwrite/fresh-build publish protocol for persisted
-    indexes (r12 — extracted so the simhash and IVF entry points cannot
-    drift): ``write_to(target_dir)`` writes the index payload into
-    ``target_dir`` and this helper decides the layout, the lease, and
-    the swap.
-
-    - Layout: ``pointer`` True forces the pointer-versioned layout,
-      False forbids it (raises on a pointer root — forward-only), None
-      keeps the index's current layout.
-    - Lease: rewriting an EXISTING index or publishing a POINTER version
-      holds the maintenance lease (live ingest fails fast, concurrent
-      maintenance is refused, the pointer flip keeps
-      :func:`pointer_swap_dir`'s single-sequencer invariant, and a fresh
-      build's staged-but-uncommitted ``_v-*`` dir cannot be swept by a
-      racing swap's cleanup). Only a fresh LEGACY build (target absent,
-      plain write, no swap) runs lease-free.
-    - TOCTOU fences: the layout is re-derived UNDER the lease (a
-      legacy→pointer migration landing between the pre-lease probe and
-      acquisition must not send the rewrite to the shadowed legacy
-      root); an off-lease run that finds the index became
-      pointer-versioned raises BEFORE writing, and re-checks AFTER the
-      legacy write too — a racing pointer build committing mid-write
-      would leave the legacy data shadowed at root level (swept by the
-      next swap's legacy cleanup), so returning success would silently
-      lose the build; the raise makes the caller's retry re-probe and
-      take the leased path."""
-    pre_pointer = resolve_data_dir(spark, path) != path
-    pre_ptr = pre_pointer if pointer is None else pointer
-    if pre_pointer and not pre_ptr:
-        raise ValueError(
-            f"{path} uses the pointer-versioned layout; it cannot be "
-            "rewritten in the legacy rename-swap layout"
-        )
-
-    def _publish(leased: bool) -> None:
-        is_pointer = resolve_data_dir(spark, path) != path
-        ptr = is_pointer if pointer is None else pointer
-        if is_pointer and not ptr:
-            raise ValueError(
-                f"{path} uses the pointer-versioned layout; it cannot "
-                "be rewritten in the legacy rename-swap layout"
-            )
-        if ptr and not leased:
-            raise MaintenanceLeaseHeld(
-                f"{path} became pointer-versioned while this fresh "
-                "legacy build was starting — retry"
-            )
-        if ptr:
-            staged = stage_version_dir(path)
-            write_to(staged)
-            pointer_swap_dir(spark, path, staged, keep=keep)
-        else:
-            write_to(path)
-            if not leased and resolve_data_dir(spark, path) != path:
-                raise MaintenanceLeaseHeld(
-                    f"{path} became pointer-versioned while this fresh "
-                    "legacy build was writing — the root-level data is "
-                    "shadowed and will be swept; retry"
-                )
-
-    fs, hpath = _fs(spark, path)
-    if pre_ptr or fs.exists(hpath(path)):
-        with maintenance_lease(spark, path, owner):
-            _publish(leased=True)
-    else:
-        _publish(leased=False)
+def publish_version(spark, root: str, write_to) -> str:
+    """The ONE way a persisted index version is created or replaced — the
+    IVF and SimHash builds, the IVF rebuild and both compactions all
+    publish through it: stage a fresh ``root/_v-*`` dir, let
+    ``write_to(staged)`` write the whole payload into it, then commit it
+    with :func:`pointer_swap_dir`. The caller MUST hold ``root``'s
+    maintenance lease (:func:`maintenance_lease`): it makes
+    stage+commit single-sequencer, fails live ingest fast, and bumps the
+    generation that aborts in-flight ingest commits. A ``write_to``
+    failure leaves the live version untouched; its half-written stage is
+    swept by the next publish. Returns the published version dir."""
+    staged = stage_version_dir(root)
+    write_to(staged)
+    pointer_swap_dir(spark, root, staged)
+    return staged
 
 
 def _lease_path(index_path: str) -> str:
     """The lease lives as a SIBLING of the index directory, not inside it:
-    rebuild/compaction atomically swap the index dir (or a subdir) away,
-    and a lock file inside the swapped tree would vanish mid-hold."""
+    a fresh build takes it before the index root exists, and the root
+    holds only version dirs, pointers and the ingest spill."""
     return index_path.rstrip("/") + "._maintenance.lock"
 
 
@@ -808,8 +747,12 @@ def _exclusive_create(spark, fs, hp):
     advertising conditional creates the returned stream's CLOSE is the
     exclusive commit (``If-None-Match: *`` PUT) — the caller must treat a
     close-time conflict as "already exists", which
-    :func:`acquire_maintenance_lease` does (r13)."""
+    :func:`acquire_maintenance_lease` does (r13). The lease's parent
+    directory is created first on ``file://`` — ``createNewFile`` throws
+    when it is missing, and a build into a new directory tree takes the
+    lease before anything else exists there."""
     if fs.getScheme() == "file":
+        fs.mkdirs(hp.getParent())
         jf = spark._jvm.java.io.File(hp.toUri().getPath())
         if not jf.createNewFile():
             raise FileExistsError(str(hp))
@@ -1419,8 +1362,7 @@ def acquire_maintenance_lease(
     the PUT carries ``If-None-Match: *`` and commits at close, so a lost
     race surfaces as a close-time conflict handled exactly like a
     refused create, and nothing of the loser's is ever on the store to
-    clean up); without the capability it remains best-effort — same
-    caveat as :func:`atomic_swap_dir`.
+    clean up); without the capability it remains best-effort.
 
     ``ttl_sec`` must be >= 1 (r13): staleness and replacement
     discrimination happen at contention-window resolution, so a
@@ -1513,10 +1455,16 @@ def acquire_maintenance_lease(
         try:
             out = _exclusive_create(spark, fs, lease)
         except Exception as e:
-            # ONLY the exclusive create's failure means "held" — a write
-            # failure after a successful create is handled below, so a
-            # permission or transient-IO error can't leave our own empty
-            # lease wedging the index for a full TTL (r10 ADVICE)
+            # ONLY an "already exists" refusal means "held"; any other
+            # create failure (missing parent, permissions, transient IO)
+            # re-raises as itself instead of posing as contention. A
+            # write failure after a successful create is handled below,
+            # so it can't leave our own empty lease wedging the index for
+            # a full TTL (r10 ADVICE)
+            if not (
+                isinstance(e, FileExistsError) or _is_conditional_conflict(e)
+            ):
+                raise
             last_err = e
             if _contended(attempt):
                 continue
@@ -2019,8 +1967,7 @@ def maintenance_lease(spark, index_path: str, owner: str, ttl_sec: int = DEFAULT
 
 
 def _generation_path(index_path: str) -> str:
-    """Sibling of the index dir, like the lease — it must survive the
-    maintenance ops' whole-directory atomic swaps."""
+    """Sibling of the index dir, like the lease."""
     return index_path.rstrip("/") + "._maintenance.generation"
 
 

@@ -21,12 +21,11 @@ leave the executors.
 from __future__ import annotations
 
 import functools
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from twitter_event_stream_spark.fsio import atomic_swap_dir, data_file_count
+from twitter_event_stream_spark.fsio import data_file_count
 from twitter_event_stream_spark.registry import query
 from twitter_event_stream_spark.tables import table
 
@@ -385,35 +384,21 @@ def _simhash_band_rows(
     )
 
 
-def write_band_rows(rows: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write pre-computed (doc_id, sig, band, val) band rows in the index
-    layout (parquet partitioned by band). Factored out of
-    :func:`write_simhash_index` so callers that already hold a batch's band
-    rows (the X116 ingest gate) can append them WITHOUT re-tokenizing and
-    re-voting the text — keeping the 'signatures compute once per document
-    ever' claim literally true. Resolves through the index's pointer when
-    it uses the versioned layout (r11) — appends land in the CURRENT
-    version dir, so the pointer-swap maintenance path and streaming ingest
-    compose exactly like the legacy rename-swap path did.
-
-    ``mode="overwrite"`` on a POINTER-VERSIONED index raises (r12): it
-    would rewrite the LIVE ``_v-*`` dir in place — no lease, no staged
-    swap — bypassing the atomic-publish protocol and breaking snapshot
-    isolation for concurrent probes (forward-only, the compactions'
-    rule). Rewrites of a pointer index go through
-    :func:`write_simhash_index`, which stages a fresh version under the
-    maintenance lease and flips the pointer."""
+def write_band_rows(rows: DataFrame, path: str) -> None:
+    """Append pre-computed (doc_id, sig, band, val) band rows to the
+    CURRENT version of the SimHash index at ``path`` (parquet partitioned
+    by band). Factored out of :func:`write_simhash_index` so callers that
+    already hold a batch's band rows (the X116 ingest gate) can append
+    them WITHOUT re-tokenizing and re-voting the text — keeping the
+    'signatures compute once per document ever' claim literally true.
+    Append-only: every rewrite publishes a fresh version through
+    :func:`write_simhash_index` or :func:`compact_band_rows`, never in
+    place. Raises :class:`FileNotFoundError` when no index exists at
+    ``path``."""
     from twitter_event_stream_spark.fsio import resolve_data_dir
 
     cur = resolve_data_dir(rows.sparkSession, path)
-    if mode == "overwrite" and cur != path:
-        raise ValueError(
-            f"{path} uses the pointer-versioned layout; overwriting the "
-            "live version dir in place would bypass the staged "
-            "atomic-publish protocol — use write_simhash_index for "
-            "rewrites"
-        )
-    rows.write.mode(mode).partitionBy("band").parquet(cur)
+    rows.write.mode("append").partitionBy("band").parquet(cur)
 
 
 def write_simhash_index(
@@ -422,7 +407,6 @@ def write_simhash_index(
     path: str,
     text_col: str = "text",
     mode: str = "overwrite",
-    pointer: bool | None = None,
 ) -> None:
     """Persist the corpus's SimHash dedup index (X115): 64-bit signatures
     pre-exploded into the Manku WWW'07 4x16-bit band keys, parquet
@@ -430,92 +414,78 @@ def write_simhash_index(
     then dedups against it via :func:`dedup_against_index` without
     re-reading corpus TEXT or recomputing a single signature — the
     expensive tokenize + 64-vote aggregation runs exactly once per
-    document over the corpus's lifetime (``mode="append"`` grows the
-    index with a batch's survivors — FENCED against concurrent index
-    maintenance and IDEMPOTENT under retry as of r11, the direct-call
-    twin of the streaming gate's protocol; an overlapped maintenance op
-    raises ``fsio.MaintenanceLeaseHeld`` and the retried append re-adds
-    only the (band, doc_id) rows the index lacks). The text-dedup twin of
-    the persisted IVF index (X114, vector_search.write_ivf_index).
+    document over the corpus's lifetime. The text-dedup twin of the
+    persisted IVF index (X114, vector_search.write_ivf_index).
 
-    ``pointer=True`` creates the index in the POINTER-VERSIONED layout
-    (r11, fsio.resolve_data_dir): data lives in ``<path>/_v-*`` named by a
-    ``_current-<n>`` pointer file, and every later maintenance swap is a
-    single pointer-file create instead of a directory rename — the layout
-    to use on object stores (S3A), where directory renames are neither
-    atomic nor cheap. All readers/appenders resolve automatically, so the
-    two layouts are call-compatible everywhere. The default (``None``)
-    AUTO-DETECTS on overwrite: rebuilding over an existing
-    pointer-versioned index publishes a fresh version atomically instead
-    of writing data to the legacy position readers no longer look at;
-    ``False`` on a pointer-versioned index raises (forward-only, same rule
-    as the compactions). Rewriting an EXISTING index runs under the
-    maintenance lease (r11): live ingest fails fast, concurrent
-    maintenance is refused, in-flight batches abort at their commit
-    fence; a fresh build stays lease-free."""
+    Layout: the band rows live in a version dir ``<path>/_v-*`` named by
+    a ``_current-<n>`` pointer file (fsio.resolve_data_dir), so every
+    later rewrite is a single pointer-file create — atomic on local,
+    HDFS and S3A alike.
+
+    ``mode="overwrite"`` publishes the rows as a fresh version under the
+    maintenance lease (fsio.publish_version): live ingest fails fast,
+    concurrent maintenance is refused, in-flight batches abort at their
+    commit fence. ``mode="append"`` grows the index with a batch's
+    survivors — FENCED against concurrent index maintenance and
+    IDEMPOTENT under retry (r11), the direct-call twin of the streaming
+    gate's protocol: an overlapped maintenance op raises
+    ``fsio.MaintenanceLeaseHeld`` and the retried append re-adds only the
+    (band, doc_id) rows the index lacks. The first append to a missing
+    index publishes version 1 through the build path. Any other ``mode``
+    raises :class:`ValueError`."""
+    from twitter_event_stream_spark.fsio import (
+        MaintenanceLeaseHeld,
+        _current_version,
+        assert_no_maintenance,
+        maintenance_generation,
+        maintenance_lease,
+        publish_version,
+        resolve_data_dir,
+    )
+
+    if mode not in ("overwrite", "append"):
+        raise ValueError(
+            f"write_simhash_index mode must be 'overwrite' or 'append' "
+            f"(got {mode!r})"
+        )
     rows = _simhash_band_rows(simhash64(docs, text_col))
-    if mode == "overwrite":
-        # the whole layout/lease/swap decision — including the fresh-
-        # pointer-builds-take-the-lease rule and the under-lease layout
-        # re-derive — lives in fsio.overwrite_publish, shared verbatim
-        # with write_ivf_index so the two entry points cannot drift (r12)
-        from twitter_event_stream_spark.fsio import overwrite_publish
 
-        def _write_to(target: str) -> None:
-            rows.write.mode("overwrite").partitionBy("band").parquet(target)
+    def _write_to(target: str) -> None:
+        rows.write.partitionBy("band").parquet(target)
 
-        overwrite_publish(
-            spark, path, pointer, "write_simhash_index", _write_to
-        )
+    if mode == "overwrite" or _current_version(spark, path) is None:
+        with maintenance_lease(spark, path, "write_simhash_index"):
+            if mode == "append" and _current_version(spark, path) is not None:
+                # a racing build or first append published between the
+                # probe above and the lease: publishing ours would replace
+                # its rows — the retried call appends instead
+                raise MaintenanceLeaseHeld(
+                    f"{path} was built concurrently with this first "
+                    "append — retry"
+                )
+            publish_version(spark, path, _write_to)
         return
-    if mode == "append":
-        # FENCED and IDEMPOTENT batch append (r11) — the direct-call twin
-        # of the streaming ingest gate's fences, because an unfenced
-        # append racing a maintenance swap silently loses the batch's
-        # band rows. Fail fast under a held lease; anti-join on
-        # (band, doc_id) so a retried append only re-adds what the index
-        # lacks (per-band, so a crashed partial append heals to all 4
-        # bands); re-check the maintenance generation after the append so
-        # overlapped maintenance raises instead of returning as durable.
-        from twitter_event_stream_spark.fsio import (
-            _fs,
-            assert_no_maintenance,
-            maintenance_generation,
-            resolve_data_dir,
-        )
-
-        gen0 = maintenance_generation(spark, path)
-        assert_no_maintenance(spark, path)
-        cur = resolve_data_dir(spark, path)
-        # ONLY a missing index means "first append creates the index": a
-        # read failure on an EXISTING index must raise, not silently skip
-        # the idempotency anti-join — a retried append would then write
-        # duplicate band rows as durable, re-opening the unbounded-growth
-        # shape X126 closed (r11 ADVICE). Decided by an explicit
-        # existence probe (r12), not by substring-matching the exception:
-        # a vanished-file error DURING a read of an existing index also
-        # says "FileNotFoundException" and was misclassified as
-        # first-append by the string test.
-        # Accepted window (r13 ADVICE note): a concurrent swap deleting
-        # `cur` right AFTER a False probe makes this append bootstrap a
-        # new root-level index — caught not here but by the commit-time
-        # generation fence below (gen0 re-check after the write), which
-        # raises before the append is reported durable. The index
-        # vanishing between a True probe and spark.read.parquet raises
-        # loudly on its own (safe direction).
-        fs, hp = _fs(spark, cur)
-        if fs.exists(hp(cur)):
-            existing = spark.read.parquet(cur).select("band", "doc_id")
-        else:
-            existing = None
-        if existing is not None:
-            rows = rows.join(existing, ["band", "doc_id"], "left_anti")
-        rows.write.mode("append").partitionBy("band").parquet(cur)
-        # spaced_read (r13): the post-append fence certifies the append
-        # as durable; one lease-read blip must not certify
-        assert_no_maintenance(spark, path, generation=gen0, spaced_read=True)
-        return
-    write_band_rows(rows, path, mode)
+    # FENCED and IDEMPOTENT batch append (r11) — the direct-call twin of
+    # the streaming ingest gate's fences, because an unfenced append
+    # racing a maintenance swap silently loses the batch's band rows.
+    # Fail fast under a held lease; anti-join on (band, doc_id) so a
+    # retried append only re-adds what the index lacks (per-band, so a
+    # crashed partial append heals to all 4 bands); re-check the
+    # maintenance generation after the append so overlapped maintenance
+    # raises instead of returning as durable. A read failure on the
+    # existing index raises rather than skipping the anti-join, which
+    # would let a retried append write duplicate band rows as durable
+    # (r11 ADVICE).
+    gen0 = maintenance_generation(spark, path)
+    assert_no_maintenance(spark, path)
+    cur = resolve_data_dir(spark, path)
+    existing = spark.read.parquet(cur).select("band", "doc_id")
+    rows.join(existing, ["band", "doc_id"], "left_anti").write.mode(
+        "append"
+    ).partitionBy("band").parquet(cur)
+    # spaced_read (r13): the post-append fence certifies the append
+    # as durable; one lease-read blip must not certify
+    assert_no_maintenance(spark, path, generation=gen0, spaced_read=True)
 
 
 def dedup_against_index(
@@ -625,7 +595,6 @@ def compact_band_rows(
     spark: SparkSession,
     path: str,
     files_per_band: int = 1,
-    pointer_swap: bool | None = None,
 ) -> dict:
     """Compact the persisted SimHash dedup index (X115) down to
     ``files_per_band`` parquet files per band partition — the maintenance
@@ -637,42 +606,25 @@ def compact_band_rows(
     SAME rows (content equality and unchanged probe verdicts pinned by
     test) clustered by band — ``repartition("band")`` lands each band in
     one writer task, so the rewrite is a single shuffle of the index —
-    then swaps the live directory atomically (:func:`fsio.atomic_swap_dir`):
-    probes resolve either the old file set or the new one, never a mix.
-    Runs under the index's maintenance lease (r10 — mechanical quiescing):
-    an ingest handler racing the swap fails fast at its next batch
-    (``fsio.assert_no_maintenance``) instead of landing its append in the
-    doomed directory, and a second concurrent maintenance op is refused.
-
-    ``pointer_swap`` picks the publish mechanism (r11): ``None`` keeps the
-    index's current layout (pointer-versioned dirs stay pointer-versioned,
-    legacy dirs use the rename swap); ``True`` publishes through a
-    ``_current-<n>`` pointer flip (:func:`fsio.pointer_swap_dir`) —
-    MIGRATING a legacy index to the versioned layout in the same pass,
-    which is the S3A-safe form (single small-file create, no directory
-    rename); ``False`` on a pointer-versioned index raises — the layouts
-    are forward-only.
+    into a fresh version dir published by a pointer flip
+    (:func:`fsio.publish_version`): probes resolve either the old file
+    set or the new one, never a mix. Runs under the index's maintenance
+    lease (r10 — mechanical quiescing): an ingest handler racing the
+    publish fails fast at its next batch
+    (``fsio.assert_no_maintenance``), and a second concurrent maintenance
+    op is refused.
 
     Returns ``{"files_before", "files_after"}`` for the caller's log;
     trigger compaction on :func:`fsio.data_file_count` (say, > 64 files
     per band), not on row count — rows never change."""
     from twitter_event_stream_spark.fsio import (
         maintenance_lease,
-        pointer_swap_dir,
+        publish_version,
         resolve_data_dir,
-        stage_version_dir,
     )
 
     with maintenance_lease(spark, path, "compact_band_rows"):
         cur = resolve_data_dir(spark, path)
-        is_pointer = cur != path
-        if pointer_swap is None:
-            pointer_swap = is_pointer
-        if is_pointer and not pointer_swap:
-            raise ValueError(
-                f"{path} uses the pointer-versioned layout; it cannot be "
-                "compacted back to the legacy rename-swap layout"
-            )
         before = data_file_count(spark, cur)
         idx = spark.read.parquet(cur)
         if files_per_band <= 1:
@@ -686,15 +638,10 @@ def compact_band_rows(
                 .repartition("band", "_salt")
                 .drop("_salt")
             )
-        if pointer_swap:
-            staged = stage_version_dir(path)
-            df.write.partitionBy("band").parquet(staged)
-            pointer_swap_dir(spark, path, staged)
-        else:
-            tmp = f"{path}.compact-{uuid.uuid4().hex}"
-            df.write.partitionBy("band").parquet(tmp)
-            atomic_swap_dir(spark, path, tmp)
+        staged = publish_version(
+            spark, path, lambda t: df.write.partitionBy("band").parquet(t)
+        )
         return {
             "files_before": before,
-            "files_after": data_file_count(spark, resolve_data_dir(spark, path)),
+            "files_after": data_file_count(spark, staged),
         }

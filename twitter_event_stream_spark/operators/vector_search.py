@@ -17,14 +17,12 @@ by design (one bucket), and the exact-contract HASH variant
 
 from __future__ import annotations
 
-import uuid
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from twitter_event_stream_spark.fsio import atomic_swap_dir, data_file_count
+from twitter_event_stream_spark.fsio import data_file_count
 
 
 def knn_topk(
@@ -498,61 +496,53 @@ def write_ivf_index(
     n_cells: int | None = None,
     seed: int = 42,
     distributed: bool | None = None,
-    pointer: bool | None = None,
 ) -> None:
     """Persist an IVF index: train the coarse quantizer once, then write
-    ``<path>/centroids`` (cell id + centroid vector) and ``<path>/cells``
-    (the corpus, PARTITIONED BY cell) as parquet. Build-once/probe-many is
-    how ANN actually deploys — :func:`ivf_topk` retrains and reassigns on
-    every call, which is right for one-shot queries and wasteful for a
-    served index. Partitioning the corpus by cell turns every later probe
-    into a pruned scan: only the probed cells' files are read (dynamic
-    partition pruning through the cell join; pinned by test). Same seeded
-    trainer as ivf_topk, so a rebuilt index reproduces bit-identically.
+    ``centroids`` (cell id + centroid vector) and ``cells`` (the corpus,
+    PARTITIONED BY cell) as parquet. Build-once/probe-many is how ANN
+    actually deploys — :func:`ivf_topk` retrains and reassigns on every
+    call, which is right for one-shot queries and wasteful for a served
+    index. Partitioning the corpus by cell turns every later probe into a
+    pruned scan: only the probed cells' files are read (dynamic partition
+    pruning through the cell join; pinned by test). Same seeded trainer as
+    ivf_topk, so a rebuilt index reproduces bit-identically.
 
-    ``pointer=True`` creates the index in the POINTER-VERSIONED layout
-    (r11, fsio.resolve_data_dir): the centroid+cells tree lives in
-    ``<path>/_v-*`` named by a ``_current-<n>`` pointer file, the
+    Layout: the centroid+cells tree lives in a version dir ``<path>/_v-*``
+    named by a ``_current-<n>`` pointer file (fsio.resolve_data_dir), the
     streaming-ingest spill stays beside it at ``<path>/ingest``, and every
-    later maintenance swap (rebuild, cell compaction) is a single
-    pointer-file create instead of a directory rename — the S3A-safe
-    layout. Readers resolve automatically, so both layouts are
-    call-compatible everywhere. The default (``None``) AUTO-DETECTS: a
-    full rebuild over an existing pointer-versioned root publishes a
-    fresh version atomically instead of writing to the legacy position
-    readers no longer look at; ``False`` on a pointer-versioned root
-    raises (forward-only, same rule as the compactions).
-
-    Retraining over an EXISTING index runs under the maintenance lease
-    (r11) — it IS maintenance, and the drift-rebuild guidance points here
-    — so live ingest fails fast, a concurrent maintenance op is refused,
-    and in-flight batches abort at their commit fence via the generation
-    bump; a fresh build stays lease-free."""
-    from twitter_event_stream_spark.fsio import overwrite_publish
+    publish — this build, a rebuild, a cell compaction — is a single
+    pointer-file create (fsio.publish_version), atomic on local, HDFS and
+    S3A alike. The build runs under the maintenance lease (r11): live
+    ingest fails fast, a concurrent maintenance op is refused, and
+    in-flight batches abort at their commit fence via the generation
+    bump."""
+    from twitter_event_stream_spark.fsio import (
+        maintenance_lease,
+        publish_version,
+    )
 
     bc = _train_quantizer(spark, vectors, n_cells, seed, distributed)
     if bc is None:
         raise ValueError("cannot index an empty corpus")
+    with maintenance_lease(spark, path, "write_ivf_index"):
+        publish_version(
+            spark, path, lambda t: _write_ivf_tree(spark, vectors, bc, t)
+        )
 
-    def _write_to(target: str) -> None:
-        cm = bc.value
-        spark.createDataFrame(
-            [(int(i), [float(x) for x in row]) for i, row in enumerate(cm)],
-            "cell int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{target}/centroids")
-        _cell_assign(vectors, bc, 1).write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(f"{target}/cells")
 
-    # the whole layout/lease/swap decision — existing-index rewrites and
-    # fresh POINTER builds hold the maintenance lease, fresh LEGACY
-    # builds (including the staged `_v-*`/`.rebuild-*` dirs
-    # rebuild_ivf_index, itself already holding this lease, writes
-    # through here) stay lease-free, and the layout is re-derived UNDER
-    # the lease — lives in fsio.overwrite_publish, shared verbatim with
-    # write_simhash_index so the two entry points cannot drift (r12)
-    overwrite_publish(
-        spark, path, pointer, "write_ivf_index", _write_to, keep=("ingest",)
+def _write_ivf_tree(
+    spark: SparkSession, vectors: DataFrame, bc, target: str
+) -> None:
+    """Write one IVF version's payload into ``target``: the trained
+    centroid matrix ``bc`` as ``centroids`` and ``vectors`` assigned to
+    their nearest cell as the cell-partitioned ``cells`` tree."""
+    cm = bc.value
+    spark.createDataFrame(
+        [(int(i), [float(x) for x in row]) for i, row in enumerate(cm)],
+        "cell int, centroid array<double>",
+    ).coalesce(1).write.parquet(f"{target}/centroids")
+    _cell_assign(vectors, bc, 1).write.partitionBy("cell").parquet(
+        f"{target}/cells"
     )
 
 
@@ -574,11 +564,9 @@ def ivf_topk_indexed(
     pinned by test.
 
     The pointer is resolved ONCE per probe (r11): centroids and cells
-    come from the same version directory, so on the pointer layout a
-    rebuild flipping mid-probe can no longer pair old centroids with new
-    cell assignments (the legacy rename layout keeps its documented
-    residual race — two reads of a directory a swap replaces between
-    them); the swap's grace window keeps the resolved version readable
+    come from the same version directory, so a rebuild flipping
+    mid-probe cannot pair old centroids with new cell assignments; the
+    swap's grace window keeps the resolved version readable
     for ONE maintenance cycle — a probe outliving two back-to-back swaps
     (e.g. rebuild then compact) can have its resolved version evicted
     mid-read and fails LOUDLY (FileNotFoundException), never silently;
@@ -624,16 +612,13 @@ def ivf_topk_indexed(
     )
 
 
-def _stored_centroid_bc(spark: SparkSession, path: str):
+def _stored_centroid_bc(spark: SparkSession, data_dir: str):
     """Broadcast of a persisted index's centroid matrix (cell-ordered) —
-    the one tiny read every stored-quantizer operation shares. Resolves
-    the root's pointer (r11) so both index layouts serve identically."""
-    from twitter_event_stream_spark.fsio import resolve_data_dir
-
+    the one tiny read every stored-quantizer operation shares.
+    ``data_dir`` is the RESOLVED version dir (fsio.resolve_data_dir), so a
+    caller reads centroids and cells from one version."""
     cent_pdf = (
-        spark.read.parquet(f"{resolve_data_dir(spark, path)}/centroids")
-        .orderBy("cell")
-        .toPandas()
+        spark.read.parquet(f"{data_dir}/centroids").orderBy("cell").toPandas()
     )
     cm = np.asarray(cent_pdf["centroid"].tolist(), dtype=np.float64)
     return spark.sparkContext.broadcast(cm)
@@ -707,8 +692,7 @@ def _retire_ingest_batches(fs, hpath, path: str, ids) -> None:
     window and leave a committed manifest pointing at deleted data, a
     permanently poisoned index. The cost of that safety: a batch dir
     whose publisher crashed between publish and manifest leaks (it is
-    invisible to all manifested readers — the pre-r13 status quo; a
-    legacy-layout rebuild's whole-dir swap reclaims them implicitly; the
+    invisible to all manifested readers — the pre-r13 status quo; the
     same holds for any dir with neither manifest nor marker, whatever
     its origin — reclaiming UNMARKED dirs is exactly the publish-race
     this design exists to avoid, so they stay).
@@ -853,7 +837,7 @@ def absorb_ingested(spark: SparkSession, path: str) -> dict:
     )
 
     with maintenance_lease(spark, path, "absorb_ingested"):
-        cur = resolve_data_dir(spark, path)  # pointer layout (r11) or root
+        cur = resolve_data_dir(spark, path)
         ids = manifested_batch_ids(spark, f"{path}/ingest")
         if not ids:
             # still sweep grace-expired orphan dirs: a quiesced stream
@@ -953,96 +937,67 @@ def rebuild_ivf_index(
     n_cells: int | None = None,
     seed: int = 42,
     distributed: bool | None = None,
-    pointer_swap: bool | None = None,
 ) -> dict:
     """The drift rebuild that :func:`ivf_index_stats` skew points at, made
     executable: retrain the quantizer over every VISIBLE vector (absorbed
-    cells plus committed streaming-ingest batches), build a complete fresh
-    index in a staging sibling, then atomically swap the WHOLE index
-    directory into place. Swapping centroids and cells together matters —
-    a probe must never pair old centroids with new cell assignments, so
-    the two-file-read probe (:func:`ivf_topk_indexed`) sees either the old
-    coherent index or the new one. The ingest spill is consumed by the
-    rebuild (its vectors land in the fresh cells) and does not exist in
-    the swapped-in directory.
+    cells plus committed streaming-ingest batches), write a complete
+    fresh centroid+cells tree into a staged version dir, and publish it
+    with one pointer flip (:func:`fsio.publish_version`). Centroids and
+    cells flip together — a probe never pairs old centroids with new
+    cell assignments: :func:`ivf_topk_indexed` resolves the pointer once
+    and reads both from that single version, which the swap's grace
+    window keeps readable.
 
-    Runs under the index's maintenance lease (r10): an ingest batch
-    publishing between the visible-set snapshot and the swap would be
-    deleted with the old directory — ingest handlers now FAIL FAST while
-    the lease is held instead (fsio.assert_no_maintenance), and a second
-    concurrent maintenance op is refused. On the POINTER layout a probe
-    racing the swap is fully coherent (r11): :func:`ivf_topk_indexed`
-    resolves the pointer once and reads centroids and cells from that
-    single version, which the swap's grace window keeps readable; the
-    legacy rename layout keeps its residual race (old centroids against
-    new cells between a probe's two directory reads) — the documented
-    reason to prefer the pointer layout on non-atomic-rename filesystems.
-    A crash BEFORE the swap leaves the live index untouched plus a stray
-    ``<path>.rebuild-*`` staging dir to clean; a crash after it leaves the
-    new index live. Deterministic: same visible vectors + seed reproduce
-    the same index as a fresh :func:`write_ivf_index` build (pinned by
-    test).
-
-    ``pointer_swap`` picks the publish mechanism (r11): ``None`` keeps the
-    index's current layout; ``True`` publishes the fresh tree as a new
-    ``<path>/_v-*`` version named by a pointer-file flip
-    (:func:`fsio.pointer_swap_dir`) — the S3A-safe form, migrating a
-    legacy index in the same pass — and then retires the consumed ingest
-    batches through the shared one-cycle-grace rule (r13,
-    :func:`_retire_ingest_batches` — manifests now, data dirs next pass;
-    the rename swap removed the whole spill implicitly). A crash between the flip and the
-    retire leaves the consumed batches transiently visible TWICE through
+    Runs under the index's maintenance lease (r10): ingest handlers FAIL
+    FAST while the lease is held (fsio.assert_no_maintenance), so no
+    batch publishes between the visible-set snapshot and the flip, and a
+    second concurrent maintenance op is refused. After the flip the
+    consumed ingest batches are retired through the shared
+    one-cycle-grace rule (r13, :func:`_retire_ingest_batches` —
+    manifests now, data dirs next pass). A crash before the flip leaves
+    the live index untouched (the half-written stage is swept by the
+    next publish); a crash between the flip and the retire leaves the
+    consumed batches transiently visible TWICE through
     :func:`read_ivf_cells` (fresh cells already hold their vectors) —
     the same bounded at-least-once window :func:`absorb_ingested`
     documents for its own crash, and the next absorb/rebuild converges it
-    to exactly-once. ``False`` on a pointer-versioned index raises.
+    to exactly-once. Deterministic: same visible vectors + seed reproduce
+    the same index as a fresh :func:`write_ivf_index` build (pinned by
+    test).
 
     Returns ``{"n_vectors", "n_cells_before", "n_cells_after",
     "pending_batches_consumed"}``."""
     from twitter_event_stream_spark.fsio import (
         _fs,
-        atomic_swap_dir,
         maintenance_lease,
         manifested_batch_ids,
-        pointer_swap_dir,
+        publish_version,
         resolve_data_dir,
-        stage_version_dir,
     )
 
     with maintenance_lease(spark, path, "rebuild_ivf_index"):
         cur = resolve_data_dir(spark, path)
-        is_pointer = cur != path
-        if pointer_swap is None:
-            pointer_swap = is_pointer
-        if is_pointer and not pointer_swap:
-            raise ValueError(
-                f"{path} uses the pointer-versioned layout; it cannot be "
-                "rebuilt back to the legacy rename-swap layout"
-            )
-        vectors = read_ivf_cells(spark, path).select("vec_id", "embedding")
+        vectors = read_ivf_cells(spark, path, data_dir=cur).select(
+            "vec_id", "embedding"
+        )
         n = vectors.count()
         n_before = spark.read.parquet(f"{cur}/centroids").count()
         pending_ids = manifested_batch_ids(spark, f"{path}/ingest")
-        if pointer_swap:
-            staged = stage_version_dir(path)
-            write_ivf_index(spark, vectors, staged, n_cells, seed, distributed)
-            pointer_swap_dir(spark, path, staged, keep=("ingest",))
-            fs, hpath = _fs(spark, path)
-            # one-cycle grace retirement, shared with absorb (r13): the
-            # manifests go now, the data dirs on the next pass — an
-            # in-flight probe reading the consumed batches keeps its files
-            _retire_ingest_batches(fs, hpath, path, pending_ids)
-        else:
-            tmp = f"{path}.rebuild-{uuid.uuid4().hex}"
-            write_ivf_index(spark, vectors, tmp, n_cells, seed, distributed)
-            atomic_swap_dir(spark, path, tmp)
-        after_dir = resolve_data_dir(spark, path)
+        bc = _train_quantizer(spark, vectors, n_cells, seed, distributed)
+        if bc is None:
+            raise ValueError("cannot index an empty corpus")
+        publish_version(
+            spark, path, lambda t: _write_ivf_tree(spark, vectors, bc, t)
+        )
+        fs, hpath = _fs(spark, path)
+        # one-cycle grace retirement, shared with absorb (r13): the
+        # manifests go now, the data dirs on the next pass — an
+        # in-flight probe reading the consumed batches keeps its files
+        _retire_ingest_batches(fs, hpath, path, pending_ids)
         return {
             "n_vectors": n,
             "n_cells_before": n_before,
-            "n_cells_after": spark.read.parquet(
-                f"{after_dir}/centroids"
-            ).count(),
+            "n_cells_after": len(bc.value),
             "pending_batches_consumed": len(pending_ids),
         }
 
@@ -1087,7 +1042,6 @@ def compact_ivf_cells(
     spark: SparkSession,
     path: str,
     files_per_cell: int = 1,
-    pointer_swap: bool | None = None,
 ) -> dict:
     """Compact a persisted IVF index's cell partitions (X114) down to
     ``files_per_cell`` parquet files per cell — the maintenance half of
@@ -1098,42 +1052,27 @@ def compact_ivf_cells(
     drifts toward thousands of tiny files per cell. Compaction rewrites
     the same vectors (content equality, bit-identical probe results, and
     unchanged occupancy stats pinned by test) clustered by cell — one
-    shuffle, each cell in one writer task — then swaps ``<path>/cells``
-    atomically; the centroids file is untouched, so the quantizer and
-    every cell assignment are exactly preserved. Runs under the index's
-    maintenance lease (r10): a streaming append racing the swap now fails
-    fast at its next batch instead of landing files in the doomed
-    directory, and a concurrent maintenance op is refused.
-
-    ``pointer_swap`` picks the publish mechanism (r11): ``None`` keeps the
-    index's current layout; ``True`` publishes a whole fresh version dir —
-    compacted cells plus a byte-exact COPY of the untouched centroids
-    file — through a pointer flip (:func:`fsio.pointer_swap_dir`), the
-    S3A-safe form, migrating a legacy index in the same pass; ``False``
-    on a pointer-versioned index raises.
+    shuffle, each cell in one writer task — into a fresh version dir
+    beside a byte-exact COPY of the untouched centroids file, published
+    by one pointer flip (:func:`fsio.publish_version`), so the quantizer
+    and every cell assignment are exactly preserved. Runs under the
+    index's maintenance lease (r10): a streaming append racing the
+    publish fails fast at its next batch instead of landing files in the
+    retired version, and a concurrent maintenance op is refused.
 
     Returns ``{"files_before", "files_after"}``; trigger on
     :func:`fsio.data_file_count` growth, and note compaction is NOT the
     drift rebuild — occupancy skew still calls for
-    :func:`write_ivf_index` (full retrain) per :func:`ivf_index_stats`."""
+    :func:`rebuild_ivf_index` (full retrain) per :func:`ivf_index_stats`."""
     from twitter_event_stream_spark.fsio import (
         copy_dir,
         maintenance_lease,
-        pointer_swap_dir,
+        publish_version,
         resolve_data_dir,
-        stage_version_dir,
     )
 
     with maintenance_lease(spark, path, "compact_ivf_cells"):
         cur = resolve_data_dir(spark, path)
-        is_pointer = cur != path
-        if pointer_swap is None:
-            pointer_swap = is_pointer
-        if is_pointer and not pointer_swap:
-            raise ValueError(
-                f"{path} uses the pointer-versioned layout; it cannot be "
-                "compacted back to the legacy rename-swap layout"
-            )
         cells_dir = f"{cur}/cells"
         before = data_file_count(spark, cells_dir)
         cells = spark.read.parquet(cells_dir)
@@ -1148,18 +1087,13 @@ def compact_ivf_cells(
                 .repartition("cell", "_salt")
                 .drop("_salt")
             )
-        if pointer_swap:
-            staged = stage_version_dir(path)
-            df.write.partitionBy("cell").parquet(f"{staged}/cells")
-            copy_dir(spark, f"{cur}/centroids", f"{staged}/centroids")
-            pointer_swap_dir(spark, path, staged, keep=("ingest",))
-        else:
-            tmp = f"{cells_dir}.compact-{uuid.uuid4().hex}"
-            df.write.partitionBy("cell").parquet(tmp)
-            atomic_swap_dir(spark, cells_dir, tmp)
+
+        def _write_to(target: str) -> None:
+            df.write.partitionBy("cell").parquet(f"{target}/cells")
+            copy_dir(spark, f"{cur}/centroids", f"{target}/centroids")
+
+        staged = publish_version(spark, path, _write_to)
         return {
             "files_before": before,
-            "files_after": data_file_count(
-                spark, f"{resolve_data_dir(spark, path)}/cells"
-            ),
+            "files_after": data_file_count(spark, f"{staged}/cells"),
         }

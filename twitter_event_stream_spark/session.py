@@ -80,6 +80,14 @@ def configure_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_cpus() -> int:
+    """The local core count the engine runs on: ``$SPARK_GRAFT_CPUS`` when
+    set, else every core the OS reports (4 when it reports none). The one
+    resolution point — ``get_spark`` sizes ``local[N]`` with it and the
+    bench records it."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or os.cpu_count() or 4
+
+
 def get_spark(
     app_name: str = "twitter-event-stream-spark",
     cpus: int | None = None,
@@ -88,12 +96,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a local SparkSession with the engine conventions.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all cores. Local mode is a
+    ``cpus`` defaults to :func:`default_cpus`. Local mode is a
     single JVM with N executor threads; the partitioning discipline in the
     operators is what makes the same plans hold on a multi-executor cluster.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or os.cpu_count() or 4
+        cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (

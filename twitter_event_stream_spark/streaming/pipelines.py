@@ -811,7 +811,6 @@ def dedup_ingest_batch(
                         "doc_id",
                     ),
                     index_path,
-                    mode="append",
                 )
                 # COMMIT-TIME FENCE (r11, closing the r10 "residual race"):
                 # re-check immediately before the manifest write, with the
@@ -1122,17 +1121,20 @@ def vector_ingest_batch(index_path: str) -> Callable[[DataFrame, int], None]:
         from twitter_event_stream_spark.fsio import (
             assert_no_maintenance,
             maintenance_generation,
+            resolve_data_dir,
         )
 
         spark = batch_df.sparkSession
         # fail FAST while maintenance (absorb/rebuild/compact) holds the
-        # index lease: a rebuild's whole-dir swap would delete a batch
-        # published after its visible-set snapshot (r10); the refused
+        # index lease: a rebuild flipping in mid-batch would leave this
+        # batch assigned against retired centroids (r10); the refused
         # batch is retried by foreachBatch after the lease is released.
         # gen0 backs the commit-time fence before the manifest (r11).
         gen0 = maintenance_generation(spark, index_path)
         assert_no_maintenance(spark, index_path)
-        bc = _stored_centroid_bc(spark, index_path)
+        # one resolve: assign against and anti-join with ONE version
+        cur = resolve_data_dir(spark, index_path)
+        bc = _stored_centroid_bc(spark, cur)
         assigned = _cell_assign(batch_df, bc, 1)
         assigned.persist()
         try:
@@ -1148,12 +1150,8 @@ def vector_ingest_batch(index_path: str) -> Callable[[DataFrame, int], None]:
             touched = [
                 r.cell for r in assigned.select("cell").distinct().collect()
             ]
-            from twitter_event_stream_spark.fsio import resolve_data_dir
-
             already = (
-                spark.read.parquet(
-                    f"{resolve_data_dir(spark, index_path)}/cells"
-                )
+                spark.read.parquet(f"{cur}/cells")
                 .filter(F.col("cell").isin(touched))
                 .select("vec_id")
             )
@@ -1167,8 +1165,8 @@ def vector_ingest_batch(index_path: str) -> Callable[[DataFrame, int], None]:
                 _publish_atomic(fresh, batch_dir, partition_by="cell")
                 # COMMIT-TIME FENCE (r11): a rebuild that acquired (lease)
                 # or completed (generation moved) while this batch computed
-                # may have swapped the whole index away — including the
-                # just-published unmanifested dir. Abort before the
+                # may have published new centroids this batch was not
+                # assigned against, or retired its id. Abort before the
                 # manifest certifies it; the retry re-anti-joins against
                 # the (possibly rebuilt) tree and converges. spaced_read
                 # (r13): one read blip must not certify the commit.
